@@ -44,7 +44,6 @@ from onehouse_demos_spark.operators.similarity import (
     _as_double,
     _assign_to_centroids,
     _centroid_df,
-    _lloyd_scope,
     _pq_assign,
     _pq_codebook_df,
     _subvec_frame,
@@ -52,6 +51,39 @@ from onehouse_demos_spark.operators.similarity import (
     train_ivf_centroids,
     train_pq_codebooks,
 )
+from onehouse_demos_spark.session import small_plan
+
+
+def _residuals(vecs: DataFrame, centroids: list[list[float]]) -> DataFrame:
+    """(vec_id, cell, v): each vector minus its nearest centroid. PQ
+    quantizes what the coarse cell did NOT explain, which is where
+    IVFADC's accuracy over plain PQ comes from."""
+    cdf = _centroid_df(vecs, centroids).withColumnRenamed("cid", "cell")
+    return (
+        _assign_to_centroids(vecs.select("vec_id", "v"), centroids)
+        .withColumnRenamed("cid", "cell")
+        .join(F.broadcast(cdf), "cell")
+        .select(
+            "vec_id",
+            "cell",
+            F.zip_with("v", "c", lambda a, b: a - b).alias("v"),
+        )
+    )
+
+
+def _encode(resid: DataFrame, books, m: int, dims: int) -> DataFrame:
+    """(vec_id, codes, cell): the residual-PQ codes of every vector."""
+    return (
+        _pq_assign(
+            _subvec_frame(resid.select("vec_id", "v"), m, dims=dims), books
+        )
+        .groupBy("vec_id")
+        .agg(F.array_sort(F.collect_list(F.struct("sub", "cid"))).alias("sc"))
+        .select(
+            "vec_id", F.transform("sc", lambda s: s["cid"]).alias("codes")
+        )
+        .join(resid.select("vec_id", "cell"), "vec_id")
+    )
 
 
 class AnnIndex:
@@ -84,77 +116,46 @@ class AnnIndex:
         vecs = emb.select(
             "vec_id", _as_double(F.col("embedding")).alias("v")
         ).persist()
-        # r15: the whole build is a chain of ~30 tiny sequential jobs
-        # at local SFs (train rounds, assignment, encode, three
-        # writes) — run it under the same tiny-guarded scope the Lloyd
-        # loops use (AQE off + 1-partition shuffles; similarity.
-        # _lloyd_scope). The guard keeps AQE on when the corpus scan
-        # is cluster-wide, so the 100 TB encode/write path is
-        # untouched. Layout equivalence at tiny scale: the codes
-        # write's repartition("cell") shuffles byte-sized data that
-        # AQE coalesces to one partition anyway — one file per cell
-        # directory either way (asserted identical end-to-end by
-        # tools/ab_ann_lloyd.py and the 3-SF oracle checks).
+        # The build is a chain of ~30 tiny sequential jobs at local SFs
+        # (train rounds, assignment, encode, three writes): run it as a
+        # small plan. A cluster-wide corpus keeps AQE (tiny guard). The
+        # codes write keeps one file per cell either way: AQE coalesces
+        # its byte-sized shuffle to one partition too.
         try:
-            with _lloyd_scope(vecs):
-                dims = len(vecs.select("v").first().v)
+            with small_plan(vecs, one_partition=True) as small:
+                dims = len(small.select("v").first().v)
                 # 1. coarse quantizer
                 centroids = train_ivf_centroids(
-                    vecs.select("vec_id", F.col("v").alias("embedding")),
+                    small.select("vec_id", F.col("v").alias("embedding")),
                     k=k_coarse,
                     iters=iters,
                 )
-                assigned = _assign_to_centroids(
-                    vecs.select("vec_id", "v"), centroids
-                ).withColumnRenamed("cid", "cell")
-                # 2. residuals vs the assigned centroid (IVFADC): PQ
-                # quantizes what the coarse cell did NOT explain, which
-                # is where its accuracy over plain PQ comes from.
-                cdf = _centroid_df(vecs, centroids).withColumnRenamed(
-                    "cid", "cell"
-                )
-                resid = assigned.join(F.broadcast(cdf), "cell").select(
-                    "vec_id",
-                    "cell",
-                    F.zip_with("v", "c", lambda a, b: a - b).alias("v"),
-                ).persist()
-                # 3. PQ codebooks on residuals + encode
-                books = train_pq_codebooks(
-                    resid.select("vec_id", F.col("v").alias("embedding")),
-                    m=m,
-                    k=k_pq,
-                    iters=iters,
-                    dims=dims,
-                )
-                codes = (
-                    _pq_assign(
-                        _subvec_frame(
-                            resid.select("vec_id", "v"), m, dims=dims
+                # 2. residuals vs the assigned centroid (IVFADC)
+                resid = _residuals(small, centroids).persist()
+                try:
+                    # 3. PQ codebooks on residuals + encode
+                    books = train_pq_codebooks(
+                        resid.select(
+                            "vec_id", F.col("v").alias("embedding")
                         ),
-                        books,
+                        m=m,
+                        k=k_pq,
+                        iters=iters,
+                        dims=dims,
                     )
-                    .groupBy("vec_id")
-                    .agg(
-                        F.array_sort(
-                            F.collect_list(F.struct("sub", "cid"))
-                        ).alias("sc")
-                    )
-                    .select(
-                        "vec_id",
-                        F.transform("sc", lambda s: s["cid"]).alias("codes"),
-                    )
-                    .join(resid.select("vec_id", "cell"), "vec_id")
-                )
-                # 4. persist: codes partitioned by cell → probed-cell
-                # file pruning at query time; codebooks/centroids are
-                # tiny.
-                codes.repartition("cell").write.mode(
-                    "overwrite"
-                ).partitionBy("cell").parquet(f"{path}/codes")
-                _centroid_df(vecs, centroids).write.mode(
+                    codes = _encode(resid, books, m, dims)
+                    # 4. persist: codes partitioned by cell → probed-cell
+                    # file pruning at query time; codebooks/centroids
+                    # are tiny.
+                    codes.repartition("cell").write.mode(
+                        "overwrite"
+                    ).partitionBy("cell").parquet(f"{path}/codes")
+                finally:
+                    resid.unpersist()
+                _centroid_df(small, centroids).write.mode(
                     "overwrite"
                 ).parquet(f"{path}/centroids.parquet")
-                _pq_codebook_df(spark, books).write.mode(
+                _pq_codebook_df(small.sparkSession, books).write.mode(
                     "overwrite"
                 ).parquet(f"{path}/codebooks.parquet")
                 meta = {
@@ -162,17 +163,13 @@ class AnnIndex:
                     "k_coarse": k_coarse,
                     "m": m,
                     "k_pq": k_pq,
-                    "n_vectors": vecs.count(),
+                    "n_vectors": small.count(),
                 }
             with open(f"{path}/meta.json", "w") as fh:
                 json.dump(meta, fh)
             return AnnIndex(spark, path, centroids, books, meta)
         finally:
             vecs.unpersist()
-            try:
-                resid.unpersist()
-            except Exception:
-                pass
 
     # ------------------------------------------------------- incremental
 
@@ -199,47 +196,14 @@ class AnnIndex:
         vecs = emb.select(
             "vec_id", _as_double(F.col("embedding")).alias("v")
         ).persist()
-        # r15: same tiny-guarded scope as build — the batch-only
-        # assign/encode/append chain is a handful of sequential tiny
-        # jobs at local SFs; cluster-wide batches keep AQE (guard).
         try:
-            with _lloyd_scope(vecs):
-                n = vecs.count()
+            with small_plan(vecs, one_partition=True) as small:
+                n = small.count()
                 if n == 0:
                     return 0
-                assigned = _assign_to_centroids(
-                    vecs.select("vec_id", "v"), self.centroids
-                ).withColumnRenamed("cid", "cell")
-                cdf = _centroid_df(vecs, self.centroids).withColumnRenamed(
-                    "cid", "cell"
-                )
-                resid = assigned.join(F.broadcast(cdf), "cell").select(
-                    "vec_id",
-                    "cell",
-                    F.zip_with("v", "c", lambda a, b: a - b).alias("v"),
-                )
-                codes = (
-                    _pq_assign(
-                        _subvec_frame(
-                            resid.select("vec_id", "v"),
-                            self.meta["m"],
-                            dims=self.meta["dims"],
-                        ),
-                        self.codebooks,
-                    )
-                    .groupBy("vec_id")
-                    .agg(
-                        F.array_sort(
-                            F.collect_list(F.struct("sub", "cid"))
-                        ).alias("sc")
-                    )
-                    .select(
-                        "vec_id",
-                        F.transform("sc", lambda s: s["cid"]).alias(
-                            "codes"
-                        ),
-                    )
-                    .join(resid.select("vec_id", "cell"), "vec_id")
+                resid = _residuals(small, self.centroids)
+                codes = _encode(
+                    resid, self.codebooks, self.meta["m"], self.meta["dims"]
                 )
                 codes.repartition("cell").write.mode("append").partitionBy(
                     "cell"

@@ -19,61 +19,11 @@ decimals with deterministic id tie-breaks.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onehouse_demos_spark.functions.quantize import fquant
-
-#: r15 (VERDICT r14 ask #5): the Lloyd training loops are 2×iters
-#: sequential collect-jobs over tiny frames; with AQE on, every shuffle
-#: in each round's plan becomes a separately submitted query-stage job
-#: plus a re-optimization pass — pure per-round driver overhead when
-#: the whole round's data is a few MB. Scoped AQE-off collapses each
-#: round back to ONE job. Guarded like fan_out: the conf flips only
-#: when the training input's scan parallelism is below the cluster
-#: default (single-row-group local files ⇒ 1-task scans); at 100 TB
-#: (thousands of splits) the guard keeps AQE on, where its coalescing
-#: and skew handling matter. Flag exists so tools/ab_ann_lloyd.py can
-#: interleave-A/B both variants in one JVM.
-_LLOYD_COALESCE = True
-
-
-@contextmanager
-def _lloyd_scope(df: DataFrame):
-    """Scoped spark.sql.adaptive.enabled=false around a Lloyd training
-    loop (restored in finally; results are AQE-independent — the
-    aggregations are deterministic and every round's centroids are
-    rounded to the 6-decimal grid)."""
-    spark = df.sparkSession
-    tiny = (
-        _LLOYD_COALESCE
-        and df.rdd.getNumPartitions()
-        < spark.sparkContext.defaultParallelism
-    )
-    if not tiny:
-        yield
-        return
-    # AQE-off ALONE measured 37% slower here (tools/ab_ann_lloyd.py:
-    # the tiny per-round shuffles then run at the session's full
-    # shuffle-partition count). Pair it with 1-partition shuffles —
-    # exactly the partition count AQE's coalescer picks for these
-    # byte-sized exchanges, minus the per-stage job round-trips. Safe
-    # under the tiny guard above; results are partitioning-independent
-    # (deterministic aggregates on the 6-decimal grid).
-    keys = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": "1",
-    }
-    prev = {k: spark.conf.get(k) for k in keys}
-    for k, v in keys.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
+from onehouse_demos_spark.session import small_plan
 
 
 def load_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -519,9 +469,9 @@ def train_ivf_centroids(
         .collect()
     )
     centroids = [list(r.v) for r in seeds]
-    with _lloyd_scope(vecs):
+    with small_plan(vecs, one_partition=True) as small:
         for _ in range(iters):
-            centroids = _lloyd_round(vecs, centroids)
+            centroids = _lloyd_round(small, centroids)
     return centroids
 
 
@@ -775,9 +725,9 @@ def train_pq_codebooks(
         ]
         for r in seed_rows:
             books[r.sub][r.cid] = list(r.sv)
-        with _lloyd_scope(subvecs):
+        with small_plan(subvecs, one_partition=True) as small:
             for _ in range(iters):
-                assigned = _pq_assign(subvecs, books)
+                assigned = _pq_assign(small, books)
                 # r14: collect the M×K×(D/M) (sub, cid, pos, mu)
                 # scalars directly and assemble per-codeword arrays on
                 # the driver — same dense-position argument as

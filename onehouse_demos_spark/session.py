@@ -11,8 +11,11 @@ master, which callers override via `SPARK_MASTER` or the builder.
 from __future__ import annotations
 
 import os
+import threading
+import uuid
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Confs that matter at 100 TB as much as on a laptop. AQE handles
 #: runtime shuffle-partition coalescing and skew-join splitting so we
@@ -77,3 +80,60 @@ def session_builder(
 def get_spark(**kwargs) -> SparkSession:
     """Get-or-create the engine session."""
     return session_builder(**kwargs).getOrCreate()
+
+
+_SMALL_PLAN_LOCK = threading.Lock()
+
+
+@contextmanager
+def small_plan(df: DataFrame, one_partition: bool = False):
+    """Yield `df` re-rooted in a cached, AQE-off child session of
+    `df.sparkSession`; run the small plan's actions on the yielded frame
+    inside the block.
+
+    Why: under AQE every Exchange of a small plan (a metadata collect, a
+    Lloyd round) is a separately submitted stage job plus a
+    re-optimisation pass; with AQE off the plan is one job. The child
+    has its own SQLConf, so the parent's conf, which other threads may
+    be planning writes under, is never touched; it shares the parent's
+    SparkContext and cache, so persisted frames still hit. The frame is
+    re-rooted through a uniquely named global temp view, dropped on exit.
+
+    `one_partition` is the Lloyd shape: 1-partition shuffles (what AQE
+    would coalesce these byte-sized exchanges to), applied only when
+    `df` has fewer partitions than `defaultParallelism` — the tiny
+    guard; a cluster-wide input is yielded unchanged and keeps AQE.
+    Inside a child, `df` is yielded unchanged.
+    """
+    spark = df.sparkSession
+    if getattr(spark, "_oh_small_plan_child", False) or (
+        one_partition
+        and df.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+    ):
+        yield df
+        return
+    child = getattr(spark, "_oh_small_plan_children", {}).get(one_partition)
+    if child is None:
+        with _SMALL_PLAN_LOCK:
+            children = spark.__dict__.setdefault("_oh_small_plan_children", {})
+            child = children.get(one_partition)
+            if child is None:
+                child = spark.newSession()
+                child._oh_small_plan_child = True
+                child.conf.set("spark.sql.adaptive.enabled", "false")
+                if one_partition:
+                    child.conf.set("spark.sql.shuffle.partitions", "1")
+                children[one_partition] = child
+    # newSession() starts from the SparkConf, not the parent's runtime
+    # conf: carry the keys that change these plans, on every use.
+    carried = ["spark.sql.legacy.parquet.nanosAsLong"]
+    if not one_partition:
+        carried.append("spark.sql.shuffle.partitions")
+    for key in carried:
+        child.conf.set(key, spark.conf.get(key))
+    name = f"__oh_small_plan_{uuid.uuid4().hex}"
+    df.createOrReplaceGlobalTempView(name)
+    try:
+        yield child.table(f"global_temp.{name}")
+    finally:
+        spark.catalog.dropGlobalTempView(name)

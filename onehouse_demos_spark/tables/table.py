@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from onehouse_demos_spark.session import small_plan
 from onehouse_demos_spark.tables.manifest import Manifest
 from onehouse_demos_spark.tables.timeline import FileMeta, Instant, Timeline
 
@@ -181,66 +182,11 @@ def _footer_col_stats(pf) -> dict:
     return out
 
 
-#: r14 measurement toggle for the write-path workload persist.
-_WRITE_PERSIST = True
-
-#: r15 measurement toggle for the scalar-collect AQE bypass below
-#: (tools/ab_build_scalar.py interleaves both variants in one JVM).
-_SCALAR_COLLECT = True
-
-
 def _scalar_rows(df: DataFrame) -> list:
-    """Collect a METADATA-SCALE frame (scalar aggregates, pruned file
-    lists, distinct partition values) as ONE Spark job instead of the
-    2-4 query-stage jobs AQE submits for the same plan.
-
-    Why: the write path's per-commit bookkeeping collects (candidate
-    key-range aggregate, probe-join file list, overwrite partition
-    set) return a handful of rows, but under AQE every Exchange in
-    their plans becomes a separately submitted stage job plus a
-    re-optimization pass — measured 4 jobs for one candidate
-    aggregate, 3 for one probe (plans/r15/build_jobs_before.txt).
-    AQE buys nothing on these queries at ANY scale: their outputs are
-    scalar/metadata-sized, the partial aggregation before the single-
-    partition exchange is already distributed, and there is no join
-    skew to split (the probe variant is routed here only when its key
-    side is broadcast-sized — above BROADCAST_KEY_ROWS the caller
-    keeps the AQE path for the shuffle join).
-
-    Why not spark.conf.set: the session conf is process-global and the
-    three-table build pipeline plans layout-sensitive write jobs from
-    CONCURRENT threads (mutations._build) — a scoped flip could be
-    observed by another thread's write planning and change its file
-    layout. Instead the collect runs in a dedicated `newSession()`
-    (isolated SQLConf, AQE off; shared SparkContext, shared
-    CacheManager so the caller's persisted frames still hit) through a
-    uniquely named global temp view. No global state is ever mutated.
-    """
-    spark = df.sparkSession
-    if not _SCALAR_COLLECT:
-        return df.collect()
-    scalar = getattr(spark, "_oh_scalar_session", None)
-    if scalar is None:
-        scalar = spark.newSession()
-        scalar.conf.set("spark.sql.adaptive.enabled", "false")
-        # newSession() starts from the context's SparkConf, not the
-        # parent's runtime conf — carry the two runtime settings that
-        # affect these plans' execution.
-        for key in (
-            "spark.sql.shuffle.partitions",
-            "spark.sql.legacy.parquet.nanosAsLong",
-        ):
-            try:
-                scalar.conf.set(key, spark.conf.get(key))
-            except Exception:
-                pass
-        spark._oh_scalar_session = scalar
-    name = f"__oh_scalar_{uuid.uuid4().hex}"
-    df.createOrReplaceGlobalTempView(name)
-    try:
-        return scalar.table(f"global_temp.{name}").collect()
-    finally:
-        spark.catalog.dropGlobalTempView(name)
+    """Collect a metadata-scale frame as one Spark job (see
+    session.small_plan)."""
+    with small_plan(df) as small:
+        return small.collect()
 
 
 def _harvest_one(abs_path: str, base_path: str, kind: str) -> FileMeta:
@@ -1015,7 +961,7 @@ class LakehouseTable:
             sort_cols = [c for c in (PP_COL if pp is not None else None, KEY_COL)
                          if c is not None and c in writer.columns]
             if sort_cols:
-                # r14: persist the merge result for the duration of the
+                # Persist the merge result for the duration of the
                 # write — repartitionByRange runs a range-boundary
                 # SAMPLING job over its input before the write job, so
                 # an unpersisted merge plan (carried files + anti-join +
@@ -1026,10 +972,8 @@ class LakehouseTable:
                 # (MEMORY_AND_DISK: spills rather than OOMs at scale).
                 # Unpersisted in the finally below once the files and
                 # their footer stats are on disk.
-                if _WRITE_PERSIST:
-                    writer = writer.persist()
-                    persisted = writer
-                writer = writer.repartitionByRange(
+                persisted = writer.persist()
+                writer = persisted.repartitionByRange(
                     n, *[F.col(c) for c in sort_cols]
                 ).sortWithinPartitions(*sort_cols)
             else:
@@ -1638,7 +1582,6 @@ class LakehouseTable:
             aggs.append(
                 F.collect_set(self._bucket_layout_expr()).alias("buckets")
             )
-        # r15: one job, not 2-4 AQE stage jobs (see _scalar_rows).
         row = _scalar_rows(prepared_keys.agg(*aggs))[0]
         if can_prune_parts:
             files = Manifest.prune_by_partition(files, set(row["parts"]))
@@ -1715,7 +1658,6 @@ class LakehouseTable:
         bucket directories. Returns (None, n) when the index is absent
         or has a coverage gap; the caller then takes the legacy
         stats-prune + scan-probe path (degrade, never corrupt)."""
-        # r15: scalar count — one job instead of AQE stage jobs.
         n = int(
             _scalar_rows(prepared_keys.agg(F.count(F.lit(1)).alias("n")))[
                 0
@@ -2178,9 +2120,9 @@ class LakehouseTable:
                         .select("_oh_file")
                         .distinct()
                     )
-                    # r15: metadata-scale output — collect as one job
-                    # when the key side is broadcast-sized; above that
-                    # the shuffle join keeps the AQE path.
+                    # Metadata-scale output — collect as one job when
+                    # the key side is broadcast-sized; above that the
+                    # shuffle join keeps the AQE path.
                     probe_rows = (
                         _scalar_rows(probe)
                         if batch_rows <= self.BROADCAST_KEY_ROWS
@@ -2297,7 +2239,6 @@ class LakehouseTable:
                     .select("_oh_file")
                     .distinct()
                 )
-                # r15: same single-job scalar collect as the upsert probe.
                 probe_rows = (
                     _scalar_rows(probe)
                     if n_keys <= self.BROADCAST_KEY_ROWS
@@ -2423,8 +2364,6 @@ class LakehouseTable:
             pp = self._partition_path_expr()
             removes: list[str] = []
             if pp is not None:
-                # r15: distinct partition values are metadata-scale —
-                # one job via _scalar_rows instead of AQE stage jobs.
                 parts = {
                     r[0]
                     for r in _scalar_rows(

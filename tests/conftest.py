@@ -46,6 +46,23 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(pytest.mark.full)
 
 
+_deselected_full: list = []
+
+
+def pytest_deselected(items):
+    _deselected_full.extend(i for i in items if i.get_closest_marker("full"))
+
+
+def pytest_report_collectionfinish(config, items):
+    """Name the heavy tier a default run leaves out, so it never goes
+    missing silently."""
+    if _deselected_full:
+        return (
+            f"{len(_deselected_full)} heavy-tier (full) tests deselected; "
+            'run all with: pytest tests/ -m "full or not full"'
+        )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from onehouse_demos_spark import get_spark
