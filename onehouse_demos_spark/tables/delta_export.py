@@ -17,10 +17,10 @@ Semantics:
 
 - **Snapshot personality.** Version N of the Delta log lists exactly
   the table's live BASE files at sync time — plus, for MOR tables
-  with live log content (r14), personality-owned COW rewrite files:
+  with live log content, personality-owned COW rewrite files:
   the Delta protocol has no row-level delete/append vocabulary below
   deletion vectors, so the sync rewrites ONLY the log-bearing file
-  groups (group-pruned, tables/rt_delta.py) into digest-named
+  groups (group-pruned, tables/personality.py) into digest-named
   `rtcow-*` parquet holding the merged winners and swaps them in for
   the stale candidate base files. The personality then serves the
   engine's real-time merge (`_rt`) for updates, inserts and deletes
@@ -61,21 +61,17 @@ action); building a version touches only the manifest plus one
 `os.stat` per *newly added* file (size is cached back into the log,
 never re-stat'ed).
 
-Concurrency + durability (r13, VERDICT r12 #1): every byte the
-personality WRITES — version JSON, checkpoint parquet,
-`_last_checkpoint`, clean's deletes — flows through the
-ObjectStoreClient S3 contract (tables/object_publish.py), the same
-seam the Hudi personality adopted in r12. The version file is the
-commit point: `PutObject + If-None-Match: *`, so concurrent syncers
-serialize on version numbers exactly like Delta's own `_delta_log`
-protocol requires and readers can never observe a torn or clobbered
-version file. Checkpoints and the `_last_checkpoint` hint are
-non-commit cadence objects: atomic full-object puts (readers see the
-old or the new complete object, both valid). Writer-internal state
-reads (`_read_log_state` during a sync/checkpoint/clean) go through
-the same store; EXTERNAL replay (read_delta_snapshot /
-delta_pruned_files) stays direct file I/O — it models the engines
-that consume the bucket through their own stacks.
+Shared layer vs. this module: tables/personality.py decides what is
+exported (tombstone guards, partition columns, the group-pruned
+rewrite frame), how partition values decode, how rewrite part files
+are staged, how writer state is read, when an orphaned rewrite file
+may be deleted and how renamed columns are read back; the version
+file is committed through `Publisher.commit` (conditional put), so
+concurrent syncers serialize on version numbers as Delta's protocol
+requires. This module keeps only Delta's serialisation: the JSON
+actions, column mapping, checkpoint parquet and `_last_checkpoint`
+(non-commit cadence objects: atomic full-object puts), and the log
+replay.
 """
 
 from __future__ import annotations
@@ -88,14 +84,21 @@ import uuid
 from urllib.parse import quote, unquote
 
 from onehouse_demos_spark.tables.object_publish import Publisher, publisher
-from onehouse_demos_spark.tables.rt_delta import (
-    publish_group_rewrite,
+from onehouse_demos_spark.tables.personality import (
+    assert_no_tombstones,
+    hive_values,
+    list_state,
+    partition_columns,
+    partition_values,
+    read_physical,
+    read_state,
     rewrite_digest,
     rt_group_rewrite,
+    stage_parts,
+    sweep_orphans,
 )
 from onehouse_demos_spark.tables.table import (
     DELETED_COL,
-    HIVE_DEFAULT_PARTITION,
     PP_COL,
     LakehouseTable,
 )
@@ -123,39 +126,20 @@ def _log_dir(table: LakehouseTable) -> str:
     return os.path.join(table.base_path, _LOG_DIR)
 
 
-def _fetch(log_dir: str, name: str, pub: Publisher | None) -> bytes | None:
-    """One log object's bytes: through the store seam when the caller
-    is the WRITER (pub given), direct file I/O for external replay."""
-    p = os.path.join(log_dir, name)
-    if pub is not None:
-        return pub.get_bytes(p)
-    try:
-        with open(p, "rb") as fh:
-            return fh.read()
-    except OSError:
-        return None
-
-
-def _list_log(log_dir: str, pub: Publisher | None) -> list[str]:
-    if pub is not None:
-        return pub.list_rel(log_dir)
-    return os.listdir(log_dir) if os.path.isdir(log_dir) else []
-
-
 def _read_last_checkpoint(log_dir: str, pub: Publisher | None = None) -> int:
     """Version of the newest checkpoint per `_last_checkpoint`, -1 if
     none. Falls back to listing `*.checkpoint.parquet` when the pointer
     file is missing/corrupt — the same recovery every Delta client
     performs (the pointer is an optimization, not the source of truth)."""
     try:
-        raw = _fetch(log_dir, _LAST_CHECKPOINT, pub)
+        raw = read_state(os.path.join(log_dir, _LAST_CHECKPOINT), pub)
         if raw is None:
             raise ValueError("no _last_checkpoint")
         return int(json.loads(raw)["version"])
     except (OSError, ValueError, KeyError):
         cps = [
             int(n.split(".", 1)[0])
-            for n in _list_log(log_dir, pub)
+            for n in list_state(log_dir, pub)
             if n.endswith(".checkpoint.parquet") and n.split(".", 1)[0].isdigit()
         ]
         return max(cps) if cps else -1
@@ -174,7 +158,7 @@ def _read_checkpoint(
     live: dict[str, dict] = {}
     tombstones: dict[str, dict] = {}
     meta = None
-    raw = _fetch(log_dir, _checkpoint_name(version), pub)
+    raw = read_state(os.path.join(log_dir, _checkpoint_name(version)), pub)
     if raw is None:
         raise FileNotFoundError(_checkpoint_name(version))
     tbl = pq.read_table(io.BytesIO(raw))
@@ -216,7 +200,7 @@ def _read_log_state(
     may have been deleted by `clean_delta_log`. Tombstones accumulate
     across replay (a re-added path clears its tombstone) so the next
     checkpoint can carry the un-expired ones forward."""
-    names = _list_log(log_dir, pub)
+    names = list_state(log_dir, pub)
     if not names:
         return -1, {}, None, {}
     ckpt = _read_last_checkpoint(log_dir, pub)
@@ -239,7 +223,7 @@ def _read_log_state(
         and (v := int(n[:-5])) > ckpt
     )
     for v in versions:
-        raw = _fetch(log_dir, _version_name(v), pub)
+        raw = read_state(os.path.join(log_dir, _version_name(v)), pub)
         if raw is None:
             raise FileNotFoundError(_version_name(v))
         for line in raw.decode("utf-8").splitlines():
@@ -255,38 +239,6 @@ def _read_log_state(
             elif "metaData" in action:
                 meta = action["metaData"]
     return (versions[-1] if versions else ckpt), live, meta, tombstones
-
-
-def _partition_columns(table: LakehouseTable) -> list[str]:
-    """Partition columns the Delta personality declares: the physical
-    `partition_by` source columns (identity partitioning, the only
-    kind the on-disk layout encodes losslessly). Derived
-    `partition_expr` tables export unpartitioned — Delta has no
-    writer-independent way to declare an expression-partitioned spec,
-    and the expression's source value is not recoverable per file."""
-    return list(table.config.partition_by or [])
-
-
-def _partition_values(fm, cols: list[str]) -> dict[str, str | None]:
-    """Decode a file's hive partition path into per-column Delta
-    `partitionValues` (string-serialized per PROTOCOL.md; NULL
-    partitions — hive `__HIVE_DEFAULT_PARTITION__` — map to JSON
-    null). Multi-column paths join with '/' on the write side
-    (`table._partition_path_expr`), so the decode is a split."""
-    if not cols:
-        return {}
-    parts = (fm.partition or "").split("/")
-    if len(parts) != len(cols):
-        raise RuntimeError(
-            f"file {fm.path}: partition path {fm.partition!r} does not "
-            f"decode into {len(cols)} column value(s) {cols} — a "
-            "partition value containing '/' cannot be exported as a "
-            "Delta partition spec"
-        )
-    return {
-        c: (None if p == HIVE_DEFAULT_PARTITION else p)
-        for c, p in zip(cols, parts)
-    }
 
 
 def _schema_string(table: LakehouseTable, last_meta: dict | None = None) -> str:
@@ -399,59 +351,18 @@ def _file_stats_json(fm) -> str:
     return json.dumps(out)
 
 
-def _assert_no_tombstones(files) -> None:
-    for fm in files:
-        st = (fm.col_stats or {}).get(DELETED_COL)
-        if st is not None and st[1] is True:
-            raise RuntimeError(
-                f"live base file {fm.path} carries _oh_is_deleted=true "
-                "rows (un-compacted MOR delete); a Delta personality "
-                "over raw base files would resurrect them. Run "
-                "compaction first, or export a materialized snapshot "
-                "(interop.export_snapshot)."
-            )
-
-
-def _assert_no_log_tombstones(table) -> None:
-    """Guard for base-files-only personality modes: MOR deletes live
-    in LOG files, which base-file stats never see — serving raw base
-    files would resurrect the deleted rows. Since r13/r14 the Delta
-    and Iceberg exporters export the log delta instead of refusing;
-    the remaining caller is the HUDI personality's plain (non-rt,
-    non-compacting) mode, whose read-optimized contract keeps the
-    refusal."""
-    for fm in table.manifest.live_files(include_logs=True):
-        if fm.kind != "log":
-            continue
-        st = (fm.col_stats or {}).get(DELETED_COL)
-        if st is not None and st[1] is True:
-            raise RuntimeError(
-                f"live log file {fm.path} carries un-compacted delete "
-                "tombstones; a base-files-only personality would serve "
-                "the deleted rows. Run compaction first."
-            )
-
-
-def _rtcow_file_meta(table: LakehouseTable, rel_path: str):
-    """Re-harvest a previously-published rewrite file (digest-stable
-    name found in the synced state): footer rows/stats + hive
-    partition string, so a spec-change re-add emits faithful
-    stats/partitionValues without restaging."""
-    import pyarrow.parquet as pq
-
+def _rtcow_file_meta(rel_path: str, pf):
+    """FileMeta of a rewrite part file: footer rows/stats plus the
+    partition string of its hive directory, so add actions carry
+    faithful stats/partitionValues (and a spec-change re-add needs no
+    restaging)."""
     from onehouse_demos_spark.tables.table import _footer_col_stats
     from onehouse_demos_spark.tables.timeline import FileMeta
 
-    abs_path = os.path.join(table.base_path, rel_path)
-    pf = pq.ParquetFile(abs_path)
-    segs = [
-        unquote(s.split("=", 1)[1])
-        for s in rel_path.split("/")[:-1]
-        if "=" in s
-    ]
+    values = hive_values(os.path.dirname(rel_path))
     return FileMeta(
         path=rel_path,
-        partition="/".join(segs) if segs else None,
+        partition="/".join(values) if values else None,
         rows=pf.metadata.num_rows,
         kind="base",
         col_stats=_footer_col_stats(pf),
@@ -478,25 +389,24 @@ def sync_delta_log(
     """
     now_ms = int(time.time() * 1000) if now_ms is None else now_ms
     files = table.manifest.live_files(include_logs=False)
-    _assert_no_tombstones(files)
+    assert_no_tombstones(files)
     log_dir = _log_dir(table)
     pub = publisher(table.base_path, store)
     last_version, synced, last_meta, _ = _read_log_state(log_dir, pub)
-    part_cols = _partition_columns(table)
+    part_cols = partition_columns(table)
 
-    # Live MOR log content (r14, VERDICT r13 #3): Delta's protocol has
-    # no row-level delete/append vocabulary below deletion vectors, so
-    # the personality takes the COW lane — rewrite ONLY the
-    # log-bearing file groups (group-pruned, tables/rt_delta.py) into
-    # personality-owned `rtcow-<digest>-*` parquet and swap them in
-    # for the stale candidate base files. Digest-stable names make an
-    # unchanged log tail a no-op re-sync (the published files are
-    # reused by name); any new log write changes the digest, removes
-    # the old rewrite files from the log and adds fresh ones. Until
-    # r14 this sync REFUSED log tombstones and served updates stale.
+    # Live MOR log content: Delta's protocol has no row-level
+    # delete/append vocabulary below deletion vectors, so the
+    # personality takes the COW lane — rewrite ONLY the log-bearing
+    # file groups into personality-owned `rtcow-<digest>-*` parquet and
+    # swap them in for the stale candidate base files. Digest-stable
+    # names make an unchanged log tail a no-op re-sync (the published
+    # files are reused by name); any new log write changes the digest.
     rewrite = rt_group_rewrite(table)
     rewrite_fms: list = []
     if rewrite is not None:
+        import pyarrow.parquet as pq
+
         digest = rewrite_digest(rewrite["cand_base"], rewrite["log_paths"])
         cand_paths = {fm.path for fm in rewrite["cand_base"]}
         files = [fm for fm in files if fm.path not in cand_paths]
@@ -508,7 +418,10 @@ def sync_delta_log(
         )
         if existing:
             rewrite_fms = [
-                _rtcow_file_meta(table, rel) for rel in existing
+                _rtcow_file_meta(
+                    rel, pq.ParquetFile(os.path.join(table.base_path, rel))
+                )
+                for rel in existing
             ]
         else:
             # stage under PHYSICAL column names, matching the base
@@ -534,13 +447,14 @@ def sync_delta_log(
                         for c in merged.columns
                     ]
                 )
-            rewrite_fms = publish_group_rewrite(
-                table,
-                merged,
-                [pmap.get(c, c) for c in part_cols],
-                pub,
-                digest,
-            )
+            # An empty result is legal: logs that delete every row of
+            # the candidate groups leave a removes-only version.
+            with stage_parts(merged, part_cols) as parts:
+                for seq, (src, part_dir, _values, pf) in enumerate(parts):
+                    name = f"{prefix}{seq:04d}.parquet"
+                    rel = f"{part_dir}/{name}" if part_dir else name
+                    pub.put_file(os.path.join(table.base_path, rel), src)
+                    rewrite_fms.append(_rtcow_file_meta(rel, pf))
 
     # Delta-encode each live file path (URL-encoded, '/' and '=' kept
     # so hive-style segments stay readable — matches delta-spark).
@@ -633,7 +547,7 @@ def sync_delta_log(
             {
                 "add": {
                     "path": path,
-                    "partitionValues": _partition_values(fm, part_cols),
+                    "partitionValues": partition_values(fm, part_cols),
                     "size": size,
                     "modificationTime": now_ms,
                     "dataChange": True,
@@ -661,20 +575,11 @@ def sync_delta_log(
     )
 
     version = last_version + 1
-    payload = "".join(json.dumps(a, separators=(",", ":")) + "\n" for a in actions)
-    # The COMMIT POINT — Delta's contract (version N written by
-    # exactly one writer, readers never observe a partial version
-    # file) is exactly S3 `PutObject + If-None-Match: *` through the
-    # store seam: concurrent syncers serialize on the conditional put,
-    # the loser re-reads state and retries/no-ops.
-    if not pub.put_text(
-        os.path.join(log_dir, _version_name(version)), payload,
-        if_none_match=True,
-    ):
-        raise FileExistsError(
-            f"delta log version {version} already published by a "
-            "concurrent syncer"
-        )
+    # the commit point: version N is written by exactly one syncer
+    pub.commit(
+        os.path.join(log_dir, _version_name(version)),
+        "".join(json.dumps(a, separators=(",", ":")) + "\n" for a in actions),
+    )
     # delta-spark checkpoints every `delta.checkpointInterval` (10)
     # commits; same policy here so replay cost stays O(live files +
     # commits-since-checkpoint) no matter how many syncs accumulate.
@@ -878,7 +783,7 @@ def clean_delta_log(
     unmentioned rewrite file younger than the guard may belong to a
     concurrent in-flight sync that has published its files but not yet
     committed its version JSON — deleting it would corrupt that
-    sync's committed adds (r14 review)."""
+    sync's committed adds."""
     now_ms = int(time.time() * 1000) if now_ms is None else now_ms
     log_dir = _log_dir(table)
     pub = publisher(table.base_path, store)
@@ -895,7 +800,7 @@ def clean_delta_log(
     except Exception:
         return 0
     removed = 0
-    names = _list_log(log_dir, pub)
+    names = list_state(log_dir, pub)
     for n in names:
         if n.endswith(".json") and n[:-5].isdigit() and int(n[:-5]) <= ckpt:
             pub.delete(os.path.join(log_dir, n))
@@ -908,17 +813,14 @@ def clean_delta_log(
             and int(n.split(".", 1)[0]) < ckpt
         ):
             pub.delete(os.path.join(log_dir, n))
-    # Personality-owned COW rewrite files (`rtcow-*`, r14) whose every
-    # reference fell below the checkpoint horizon are unreachable by
-    # any retained replay — physically remove them (the expire analog
-    # of iceberg_export.expire_iceberg_snapshots; engine files are
-    # never candidates because only rtcow- names qualify). A file
-    # mentioned by ANY retained log object — checkpoint state or a
+    # Personality-owned rewrite files whose every reference fell below
+    # the checkpoint horizon are unreachable by any retained replay. A
+    # file mentioned by ANY retained log object — checkpoint state or a
     # surviving JSON's add/remove — is conservatively kept.
     mentioned: set[str] = set()
-    for n in _list_log(log_dir, pub):
+    for n in list_state(log_dir, pub):
         if n.endswith(".json") and n[:-5].isdigit():
-            raw = _fetch(log_dir, n, pub)
+            raw = read_state(os.path.join(log_dir, n), pub)
             for line in (raw or b"").decode().splitlines():
                 if not line.strip():
                     continue
@@ -936,36 +838,21 @@ def clean_delta_log(
                 continue
             mentioned.update(unquote(p) for p in live)
             mentioned.update(unquote(p) for p in tombs)
-    for dirpath, _dirs, fnames in os.walk(table.base_path):
-        if _LOG_DIR in dirpath.split(os.sep):
-            continue
-        for fn in fnames:
-            if not (fn.startswith("rtcow-") and fn.endswith(".parquet")):
-                continue
-            rel = os.path.relpath(
-                os.path.join(dirpath, fn), table.base_path
-            ).replace(os.sep, "/")
-            if rel in mentioned:
-                continue
-            mt = pub.mtime_ms(os.path.join(table.base_path, rel))
-            if mt is not None and now_ms - mt < rewrite_grace_ms:
-                continue  # possibly an in-flight sync's publish
-            pub.delete(os.path.join(table.base_path, rel))
-            removed += 1
-    return removed
+    return removed + sweep_orphans(
+        table,
+        pub,
+        lambda rel: os.path.basename(rel).startswith("rtcow-")
+        and rel.endswith(".parquet"),
+        mentioned,
+        now_ms,
+        rewrite_grace_ms,
+    )
 
 
-def delta_pruned_files(
-    delta_path: str, partition_predicate: dict[str, str | None] | None = None
-) -> list[str]:
-    """The file list a partitionValues-driven external engine
-    (Trino-class) would scan under an equality predicate on partition
-    columns — metadata-only, no footer reads. `None` predicate (or an
-    empty dict) returns every live file. Predicate values compare
-    against the string-serialized partitionValues; `None` matches the
-    NULL partition. Raises if a predicate column is not a declared
-    partition column (an engine would fall back to scanning, and a
-    pruning test passing by accident would be meaningless)."""
+def _pruned_live(delta_path: str, partition_predicate) -> tuple[list, dict]:
+    """(sorted live paths, metaData) of the replayed log, pruned by an
+    equality predicate on partitionValues alone — metadata-only, no
+    footer reads; `None` matches the NULL partition."""
     last_version, live, meta, _ = _read_log_state(
         os.path.join(delta_path, _LOG_DIR)
     )
@@ -977,12 +864,27 @@ def delta_pruned_files(
             raise ValueError(
                 f"{col!r} is not a declared partitionColumn {declared}"
             )
-    out = []
-    for path, add in live.items():
-        pv = add.get("partitionValues") or {}
-        if all(pv.get(c) == v for c, v in (partition_predicate or {}).items()):
-            out.append(path)
-    return sorted(out)
+    paths = sorted(
+        path
+        for path, add in live.items()
+        if all(
+            (add.get("partitionValues") or {}).get(c) == v
+            for c, v in (partition_predicate or {}).items()
+        )
+    )
+    return paths, meta
+
+
+def delta_pruned_files(
+    delta_path: str, partition_predicate: dict[str, str | None] | None = None
+) -> list[str]:
+    """The file list a partitionValues-driven external engine
+    (Trino-class) would scan under an equality predicate on partition
+    columns. `None` predicate (or an empty dict) returns every live
+    file. Raises if a predicate column is not a declared partition
+    column (an engine would fall back to scanning, and a pruning test
+    passing by accident would be meaningless)."""
+    return _pruned_live(delta_path, partition_predicate)[0]
 
 
 def read_delta_snapshot(
@@ -996,58 +898,20 @@ def read_delta_snapshot(
     alone when given, exactly like a partition-aware external engine.
     Used by tests and by engines without a Delta runtime; engines WITH
     one read `delta_path` natively."""
-    last_version, live, meta, _ = _read_log_state(
-        os.path.join(delta_path, _LOG_DIR)
-    )
-    if last_version < 0:
-        raise FileNotFoundError(f"no _delta_log under {delta_path}")
-    from urllib.parse import unquote
-
-    if partition_predicate:
-        declared = list((meta or {}).get("partitionColumns") or [])
-        for col in partition_predicate:
-            if col not in declared:
-                raise ValueError(
-                    f"{col!r} is not a declared partitionColumn {declared}"
-                )
-        keep = {
-            p
-            for p, add in live.items()
-            if all(
-                (add.get("partitionValues") or {}).get(c) == v
-                for c, v in partition_predicate.items()
-            )
-        }
-    else:
-        keep = set(live)
-    paths = [os.path.join(delta_path, unquote(p)) for p in live if p in keep]
     import pyspark.sql.types as T
 
-    schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    if not paths:
-        return spark.createDataFrame([], schema)
+    live, meta = _pruned_live(delta_path, partition_predicate)
+    paths = [os.path.join(delta_path, unquote(p)) for p in live]
     # Column mapping (mode=name): a real Delta reader resolves each
     # logical field through delta.columnMapping.physicalName — renamed
     # columns keep their original on-file name.
+    schema_json = json.loads(meta["schemaString"])
     phys = {
         f["name"]: (f.get("metadata") or {}).get(
             "delta.columnMapping.physicalName", f["name"]
         )
-        for f in json.loads(meta["schemaString"])["fields"]
+        for f in schema_json["fields"]
     }
-    # Read with the metaData schema (physical names), exactly like a
-    # real Delta client: files written BEFORE a schema evolution lack
-    # the newer columns, and a bare parquet read would silently drop
-    # them (first-file schema wins) — the explicit schema resolves by
-    # name and fills missing columns with null.
-    reader_schema = T.StructType(
-        [T.StructField(phys[f.name], f.dataType, True) for f in schema.fields]
+    return read_physical(
+        spark, paths, T.StructType.fromJson(schema_json), phys
     )
-    df = spark.read.schema(reader_schema).parquet(*paths)
-    if any(phys[n] != n for n in phys):
-        from pyspark.sql import functions as F
-
-        df = df.select(
-            *[F.col(phys[f.name]).alias(f.name) for f in schema.fields]
-        )
-    return df

@@ -35,15 +35,16 @@ Sync semantics (mirrors `sync_delta_log`'s snapshot-diff contract):
   retires file groups. Timeline transition files
   (`.requested` → `.inflight` → completed) are written in Hudi's
   order so the completed instant is the last thing to appear.
-- **MOR tables** (r10): `compact_mor=True` runs the engine's own
+- **MOR tables**: `compact_mor=True` runs the engine's own
   compaction before the sync, so the personality equals the `_rt`
   merged view — the documented compact-on-sync path for the
   reference's flagship MOR freshness demo (`README.md:343-344,
   756-776`). Without it the personality tracks the READ-OPTIMIZED
   view; plain log updates are documented staleness, but un-compacted
-  LOG TOMBSTONES refuse (r10, closes ADVICE r9 #3 — base-file checks
-  alone let MOR deletes resurrect through the personality).
-- **Retention, not eager clean** (r10, VERDICT r9 wrong #2): a sync
+  LOG TOMBSTONES refuse (base-file checks alone would let MOR deletes
+  resurrect through the personality). `mor_rt=True` instead publishes
+  the un-compacted logs as real HoodieLogFormat log files.
+- **Retention, not eager clean**: a sync
   that retires a file group RECORDS the replaced Hudi-named slice in
   `sync_state.json` instead of unlinking it, exactly like Hudi
   retains old slices until `clean`. `clean_hudi_personality` ages
@@ -53,7 +54,7 @@ Sync semantics (mirrors `sync_delta_log`'s snapshot-diff contract):
   + active instants, so snapshots, time travel (`as_of`) and
   incremental reads inside the retention window stay exact across any
   number of further syncs.
-- **Metadata table `files` partition** (r10, VERDICT r9 missing #4):
+- **Metadata table `files` partition**:
   each sync maintains `.hoodie/metadata/` — its own `.hoodie`
   timeline (bootstrap instant `00000000000000010` + per-sync
   deltacommits, the fixture's exact lifecycle), a `files/` partition
@@ -61,9 +62,8 @@ Sync semantics (mirrors `sync_delta_log`'s snapshot-diff contract):
   `files-0000-0_*` base slice holding one record per data partition
   (key = partition path, `filesystemMetadata` name->size map — the
   public HoodieMetadataPayload record types 1/2). The base slice is a
-  REAL HBase HFile v3 since late-r11 (tables/hfile.py, pinned on the
-  fixture's committed base slice; legacy parquet slices still read),
-  and
+  REAL HBase HFile v3 (tables/hfile.py, pinned on the fixture's
+  committed base slice; legacy parquet slices still read), and
   `hoodie.table.metadata.partitions=files` is declared in the main
   properties like the fixture does — so a reader plans from metadata
   instead of paying an S3 LIST per query, the 100 TB story.
@@ -84,6 +84,16 @@ metadata-table slice are metadata-scale (one row per partition). The
 replay reader resolves the file list driver-side from the timeline
 (Hudi semantics) and hands Spark a plain multi-path parquet scan —
 pushdown/pruning untouched.
+
+Shared layer vs. this module: tables/personality.py decides what is
+exported (tombstone guards, partition columns), how a file's partition
+values decode (this module lays them out as hive-style directories),
+and how writer state and metadata-table slices are read (store seam for
+the writer, direct I/O for external readers); every completed instant
+is committed through `Publisher.commit` (conditional put, never a
+rename). This module keeps only Hudi's serialisation: hoodie.properties,
+timeline instants and their write stats, Hudi-named hardlinked slices,
+HoodieLogFormat log files, the metadata table and the replay readers.
 """
 
 from __future__ import annotations
@@ -98,12 +108,15 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from onehouse_demos_spark.tables.delta_export import (
-    _assert_no_tombstones,
-    _partition_columns,
-    _partition_values,
+from onehouse_demos_spark.tables.object_publish import Publisher, publisher
+from onehouse_demos_spark.tables.personality import (
+    assert_no_log_tombstones,
+    assert_no_tombstones,
+    list_state,
+    partition_columns,
+    partition_values,
+    read_state,
 )
-from onehouse_demos_spark.tables.object_publish import Publisher, default_store
 from onehouse_demos_spark.tables.table import (
     DELETED_COL,
     HIVE_DEFAULT_PARTITION,
@@ -285,59 +298,8 @@ def _hoodie_dir(table_or_path) -> str:
     return os.path.join(base, _HOODIE_DIR)
 
 
-class _Publisher(Publisher):
-    """Every byte the personality PUBLISHES flows through the
-    ObjectStoreClient S3 contract (VERDICT r11 #3; shared seam in
-    tables/object_publish.py since r13): atomic full-object puts,
-    conditional put (If-None-Match) at each COMPLETED-instant commit
-    point, hardlink-free semantics — a boto3-backed client drops in
-    unchanged on S3 for the WRITE path. Scope (ADVICE r12 #1): the
-    claim is exact for publishes, for the state-adjacent reads routed
-    through get_bytes (sync state, hoodie.properties, archival copy
-    sources) and for clean's timeline/metadata listings (list_keys,
-    r13). Writer-internal reads that FOLD the materialized layout
-    (HoodieLogFormat chain folds during compaction-on-sync, HFile
-    base reads) plus the external-reader replay still read the local
-    tree directly and require a store that materializes keys at the
-    local layout — i.e. the default TreeFSObjectStoreEmulator or any
-    FS-backed bucket mount. On a non-materializing store (raw S3),
-    publishing and clean work; compaction-fold maintenance must run
-    where the bucket is mounted, or those folds grow get_object
-    routing first. Picklable (store root + base string) so executors
-    publish record-index shard files through the same contract."""
-
-    def publish_completed(self, abs_path: str, obj) -> None:
-        """The commit point: S3 `PutObject + If-None-Match: *`. Under
-        the sync mutex a completed instant can never pre-exist; if it
-        does, refuse rather than clobber a timeline another writer
-        published."""
-        if not self.put_json(abs_path, obj, if_none_match=True):
-            raise RuntimeError(
-                "hudi personality: completed instant already exists "
-                f"(concurrent writer or corrupted sync state): {abs_path}"
-            )
-
-
-def _default_store(base_path: str):
-    """Local deployments publish through the hierarchical FS emulation
-    of the S3 contract; a real cloud deployment passes a boto3-backed
-    ObjectStoreClient to sync_hudi_metadata/clean_hudi_personality."""
-    return default_store(base_path)
-
-
-def _publisher(table, store=None) -> _Publisher:
-    return _Publisher(store or _default_store(table.base_path),
-                      table.base_path)
-
-
-def _load_state(hoodie: str, pub: _Publisher | None = None) -> dict:
-    p = os.path.join(hoodie, _STATE_FILE)
-    raw = None
-    if pub is not None:
-        raw = pub.get_bytes(p)
-    elif os.path.exists(p):
-        with open(p, "rb") as fh:
-            raw = fh.read()
+def _load_state(hoodie: str, pub: Publisher | None = None) -> dict:
+    raw = read_state(os.path.join(hoodie, _STATE_FILE), pub)
     if raw is not None:
         state = json.loads(raw)
         state.setdefault("retired", {})
@@ -345,7 +307,7 @@ def _load_state(hoodie: str, pub: _Publisher | None = None) -> dict:
     return {"files": {}, "instants": [], "retired": {}}
 
 
-def _save_state(pub: _Publisher, hoodie: str, state: dict) -> None:
+def _save_state(pub: Publisher, hoodie: str, state: dict) -> None:
     # one atomic full-object PUT; the sync mutex serializes the
     # read-modify-write, the store guarantees readers never see a
     # partial object
@@ -353,15 +315,15 @@ def _save_state(pub: _Publisher, hoodie: str, state: dict) -> None:
 
 
 def _next_instant(
-    state: dict, hoodie: str | None = None, pub: _Publisher | None = None
+    state: dict, hoodie: str | None = None, pub: Publisher | None = None
 ) -> str:
     """17-digit `yyyyMMddHHmmssSSS` (table version 6), strictly above
-    every instant this exporter has minted for the table AND (ADVICE
-    r12 #3) every completed instant already visible in the timeline
+    every instant this exporter has minted for the table AND every
+    completed instant already visible in the timeline
     directory: after a crash between the commit-point conditional put
     and the state save, the state file lags the published timeline,
     and a same-millisecond retry must not re-mint the published id —
-    publish_completed would refuse a healthy retry."""
+    the commit point would refuse a healthy retry."""
     now = datetime.now(timezone.utc)
     cand = now.strftime("%Y%m%d%H%M%S") + f"{now.microsecond // 1000:03d}"
     prev = state["instants"][-1] if state["instants"] else ""
@@ -380,6 +342,31 @@ def _next_instant(
             bumped += timedelta(seconds=1)
         cand = bumped.strftime("%Y%m%d%H%M%S") + f"{ms:03d}"
     return cand
+
+
+def _publish_instant(
+    pub: Publisher, hoodie: str, instant: str, action: str, meta: dict
+) -> None:
+    """One instant lifecycle in Hudi's transition order, requested ->
+    inflight -> completed (the fixture's exact transition-file set), so
+    a reader never observes the completed file without its content.
+    The completed file is the commit point (`Publisher.commit`)."""
+    pub.put_text(os.path.join(hoodie, f"{instant}.{action}.requested"), "")
+    inflight = (
+        f"{instant}.inflight"
+        if action == "commit"
+        else f"{instant}.{action}.inflight"
+    )
+    pub.put_json(
+        os.path.join(hoodie, inflight),
+        {
+            "partitionToWriteStats": {},
+            "compacted": meta["compacted"],
+            "extraMetadata": {},
+            "operationType": meta["operationType"],
+        },
+    )
+    pub.commit(os.path.join(hoodie, f"{instant}.{action}"), meta)
 
 
 def _file_id_for(rel_path: str) -> str:
@@ -435,14 +422,14 @@ def _write_stat(partition: str, file_id: str, rel_path: str, rows: int,
 
 
 def _mor_log_guard(table: LakehouseTable, compact_mor: bool) -> None:
-    """MOR pre-sync contract (r10): with `compact_mor`, fold the live
+    """MOR pre-sync contract: with `compact_mor`, fold the live
     logs through the engine's own compaction so the personality equals
     the `_rt` merged view (the reference's headline MOR freshness
     story, `README.md:756-776`). Without it, plain log UPDATES are
     documented read-optimized staleness — but log TOMBSTONES would
     make the personality serve deleted rows to a reader that has no
-    `_rt` fallback, so the sync refuses (ADVICE r9 #3: base-file
-    stats alone can't see MOR deletes — they live in log files)."""
+    `_rt` fallback, so the sync refuses (base-file stats alone can't
+    see MOR deletes — they live in log files)."""
     logs = [
         f
         for f in table.manifest.live_files(include_logs=True)
@@ -455,11 +442,7 @@ def _mor_log_guard(table: LakehouseTable, compact_mor: bool) -> None:
 
         run_compaction(table)
         return
-    from onehouse_demos_spark.tables.delta_export import (
-        _assert_no_log_tombstones,
-    )
-
-    _assert_no_log_tombstones(table)
+    assert_no_log_tombstones(table)
 
 
 #: rt-mode log-sync size gate: the driver encodes the un-compacted
@@ -480,8 +463,8 @@ def sync_hudi_metadata(
     record_index_shards: int = _MDT_RLI_DEFAULT_SHARDS,
     store=None,
 ) -> int:
-    """Serialized entry point for the personality sync (r11, VERDICT
-    r10 next #5): the `.hoodie` sync state is read-modify-write JSON,
+    """Serialized entry point for the personality sync: the `.hoodie`
+    sync state is read-modify-write JSON,
     so two concurrent syncers (Streamer inline sync racing a manual
     CALL) could lose slices. The whole sync runs under the table's
     lock-provider mutex re-scoped to the `.hoodie` namespace — same
@@ -489,7 +472,7 @@ def sync_hudi_metadata(
     exact seam the Delta exporter's conditional version publish uses.
     Every PUBLISH inside flows through the ObjectStoreClient contract
     (`store`, default the hierarchical FS emulator rooted at the table
-    base — VERDICT r11 #3): atomic puts, conditional put at the
+    base): atomic puts, conditional put at the
     completed-instant commit point, no rename/hardlink assumed. See
     `_sync_hudi_metadata_locked` for the sync semantics."""
     hoodie = _hoodie_dir(table)
@@ -507,7 +490,7 @@ def sync_hudi_metadata(
             bloom_filters,
             record_index,
             record_index_shards,
-            _publisher(table, store),
+            publisher(table.base_path, store),
         )
     finally:
         provider.release_mutex("hudi_sync")
@@ -523,7 +506,7 @@ def _sync_hudi_metadata_locked(
     bloom_filters: bool = False,
     record_index: bool = False,
     record_index_shards: int = _MDT_RLI_DEFAULT_SHARDS,
-    pub: _Publisher | None = None,
+    pub: Publisher | None = None,
 ) -> int:
     """Write/refresh the `.hoodie` personality over the table's live
     BASE files. Returns the number of completed Hudi instants after
@@ -539,7 +522,7 @@ def _sync_hudi_metadata_locked(
     sync also refreshes `.hoodie/metadata/files` so readers plan from
     metadata instead of listing.
 
-    `mor_rt=True` (r10, the genuine `_rt` leg): the personality
+    `mor_rt=True` (the genuine `_rt` leg): the personality
     declares MERGE_ON_READ and each sync ALSO publishes the engine's
     un-compacted log files as real HoodieLogFormat AVRO data blocks
     attached to their exact file groups, under deltacommit instants —
@@ -554,19 +537,19 @@ def _sync_hudi_metadata_locked(
         for f in table.manifest.live_files(include_logs=False)
         if f.kind == "base"
     ]
-    _assert_no_tombstones(live)
-    part_cols = _partition_columns(table)
+    assert_no_tombstones(live)
+    part_cols = partition_columns(table)
     hoodie = _hoodie_dir(table)
     os.makedirs(hoodie, exist_ok=True)
     if pub is None:
-        pub = _publisher(table)
+        pub = publisher(table.base_path)
     state = _load_state(hoodie, pub)
     known = state["files"]
     live_by_path = {f.path: f for f in live}
     adds = [f for p, f in sorted(live_by_path.items()) if p not in known]
     removed = [p for p in sorted(known) if p not in live_by_path]
     props_path = os.path.join(hoodie, "hoodie.properties")
-    # Mode vs declared table type (r11 advisor item): a personality
+    # Mode vs declared table type: a personality
     # first synced compact/default declares COPY_ON_WRITE; enabling
     # mor_rt later must REWRITE the declaration (bumped checksum)
     # before any deltacommit publishes, or external readers plan a
@@ -653,7 +636,7 @@ def _sync_hudi_metadata_locked(
         known[p]["partition"] for p in known if p not in set(removed)
     }
     for fm in adds:
-        values = _partition_values(fm, part_cols)
+        values = partition_values(fm, part_cols)
         partition = _partition_rel_dir(part_cols, values)
         file_id = _file_id_for(fm.path)
         hudi_name = f"{file_id}_{_WRITE_TOKEN}_{instant}.parquet"
@@ -698,7 +681,7 @@ def _sync_hudi_metadata_locked(
     for p in removed:
         ent = known.pop(p)
         replace_ids.setdefault(ent["partition"], []).append(ent["file_id"])
-        # Retain the replaced slice (r10): the completed timeline still
+        # Retain the replaced slice: the completed timeline still
         # references it — incremental reads over the range, time travel,
         # and external readers mid-scan all need the file until
         # `clean_hudi_personality` ages it past the retention horizon
@@ -724,30 +707,7 @@ def _sync_hudi_metadata_locked(
     action = "commit" if not replace_ids else "replacecommit"
     if action == "replacecommit":
         meta["partitionToReplaceFileIds"] = replace_ids
-    # Hudi transition order: requested -> inflight -> completed, so a
-    # reader can never observe the completed file without its content.
-    req_name = (
-        f"{instant}.commit.requested"
-        if action == "commit"
-        else f"{instant}.replacecommit.requested"
-    )
-    inflight_name = (
-        f"{instant}.inflight"
-        if action == "commit"
-        else f"{instant}.replacecommit.inflight"
-    )
-    pub.put_text(os.path.join(hoodie, req_name), "")
-    pub.put_json(
-        os.path.join(hoodie, inflight_name),
-        {
-            "partitionToWriteStats": {},
-            "compacted": False,
-            "extraMetadata": {},
-            "operationType": meta["operationType"],
-        },
-    )
-    # the commit point: conditional put — never a rename
-    pub.publish_completed(os.path.join(hoodie, f"{instant}.{action}"), meta)
+    _publish_instant(pub, hoodie, instant, action, meta)
     state["instants"].append(instant)
     _save_state(pub, hoodie, state)
     if mor_rt:
@@ -776,11 +736,11 @@ def _sync_rt_logs(
     state: dict,
     part_cols: list[str],
     gate_rows: int,
-    pub: _Publisher,
+    pub: Publisher,
 ) -> int:
     """Publish the engine's un-compacted log files as real
     HoodieLogFormat AVRO data blocks under ONE deltacommit instant
-    (r10 `_rt` leg). Each engine log file becomes one Hudi log file
+    (the `_rt` leg). Each engine log file becomes one Hudi log file
     attached to its EXACT file group — single-group partitions attach
     directly; multi-group partitions resolve key->group with one
     column-pruned Spark probe of the partition's base keys (exact
@@ -851,7 +811,7 @@ def _sync_rt_logs(
     for p in new_paths:
         fm = live_logs[p]
         partition = _partition_rel_dir(
-            part_cols, _partition_values(fm, part_cols)
+            part_cols, partition_values(fm, part_cols)
         )
         part_groups = groups.get(partition)
         if not part_groups:
@@ -939,22 +899,7 @@ def _sync_rt_logs(
         },
         "operationType": "UPSERT",
     }
-    pub.put_text(
-        os.path.join(hoodie, f"{instant}.deltacommit.requested"), ""
-    )
-    pub.put_json(
-        os.path.join(hoodie, f"{instant}.deltacommit.inflight"),
-        {
-            "partitionToWriteStats": {},
-            "compacted": False,
-            "extraMetadata": {},
-            "operationType": "UPSERT",
-        },
-    )
-    # the commit point: conditional put — never a rename
-    pub.publish_completed(
-        os.path.join(hoodie, f"{instant}.deltacommit"), meta
-    )
+    _publish_instant(pub, hoodie, instant, "deltacommit", meta)
     state["instants"].append(instant)
     _save_state(pub, hoodie, state)
     return len(new_paths)
@@ -1009,44 +954,27 @@ def _mdt_properties(table_name: str) -> str:
 
 
 def _mdt_write_timeline(
-    pub: _Publisher,
+    pub: Publisher,
     mdt_hoodie: str,
     instant: str,
     stats_by_partition: dict,
     action: str = "deltacommit",
 ) -> None:
-    """One instant lifecycle (requested -> inflight -> completed) in
-    the metadata table's own timeline — the fixture's exact
-    transition-file set per instant. One instant covers EVERY metadata
-    partition written by the sync (files + column_stats), like Hudi's
-    own MDT deltacommits. Chain compactions publish a `commit`."""
-    compacted = action == "commit"
-    pub.put_text(
-        os.path.join(mdt_hoodie, f"{instant}.{action}.requested"), ""
-    )
-    inflight = (
-        f"{instant}.inflight"
-        if action == "commit"
-        else f"{instant}.{action}.inflight"
-    )
-    pub.put_json(
-        os.path.join(mdt_hoodie, inflight),
+    """One instant in the metadata table's own timeline. One instant
+    covers EVERY metadata partition written by the sync (files +
+    column_stats), like Hudi's own MDT deltacommits. Chain compactions
+    publish a `commit`."""
+    _publish_instant(
+        pub,
+        mdt_hoodie,
+        instant,
+        action,
         {
-            "partitionToWriteStats": {},
-            "compacted": compacted,
+            "partitionToWriteStats": stats_by_partition,
+            "compacted": action == "commit",
             "extraMetadata": {},
             "operationType": "UPSERT_PREPPED",
         },
-    )
-    meta = {
-        "partitionToWriteStats": stats_by_partition,
-        "compacted": compacted,
-        "extraMetadata": {},
-        "operationType": "UPSERT_PREPPED",
-    }
-    # the commit point: conditional put — never a rename
-    pub.publish_completed(
-        os.path.join(mdt_hoodie, f"{instant}.{action}"), meta
     )
 
 
@@ -1163,7 +1091,7 @@ def _mdt_full_record_schema() -> str:
 
 
 def _mdt_write_base_slice(
-    pub: _Publisher, files_dir: str, mdt_instant: str, by_partition: dict
+    pub: Publisher, files_dir: str, mdt_instant: str, by_partition: dict
 ) -> tuple[str, int, int]:
     """One full-listing base slice of the `files-0000-0` group
     (HoodieMetadataPayload types 1/2) in the fixture's OWN container:
@@ -1246,7 +1174,7 @@ def _mdt_slice_instant(name: str) -> str:
 
 
 def _mdt_write_index_base(
-    pub: _Publisher,
+    pub: Publisher,
     idx_dir: str,
     partition: str,
     group: str,
@@ -1300,22 +1228,18 @@ def _mdt_write_index_base(
 
 
 def _mdt_index_base_records(
-    idx_dir: str, group: str, pub: _Publisher | None = None
+    idx_dir: str, group: str, pub: Publisher | None = None
 ) -> tuple[str, list[dict]] | None:
     """(instant, records) of a group's NEWEST base slice, with each
     record's `key` restored from the cell row; None when the group
     has no base (legacy pure-chain layouts keep reading). With `pub`
-    (writer-internal folds — VERDICT r13 #5) the listing AND the
-    slice bytes ride the store seam; without it (external-reader
-    APIs) the read stays direct file I/O over the materialized
-    layout."""
-    from onehouse_demos_spark.tables.hfile import (
-        read_hudi_metadata_base,
-        read_hudi_metadata_base_bytes,
-    )
+    (writer-internal folds) the listing AND the slice bytes ride the
+    store seam; without it (external-reader APIs) the read stays
+    direct file I/O over the materialized layout."""
+    from onehouse_demos_spark.tables.hfile import read_hudi_metadata_base_bytes
 
     prefix = f"{group}_"
-    names = pub.list_rel(idx_dir) if pub is not None else os.listdir(idx_dir)
+    names = list_state(idx_dir, pub)
     bases = [
         n for n in names if n.startswith(prefix) and n.endswith(".hfile")
     ]
@@ -1323,16 +1247,11 @@ def _mdt_index_base_records(
         return None
     newest = max(bases, key=_mdt_slice_instant)
     newest_abs = os.path.join(idx_dir, newest)
-    if pub is not None:
-        raw = pub.get_bytes(newest_abs)
-        if raw is None:
-            raise FileNotFoundError(f"listed slice vanished: {newest_abs}")
-        return (_mdt_slice_instant(newest),
-                read_hudi_metadata_base_bytes(raw, name=newest_abs))
-    return (
-        _mdt_slice_instant(newest),
-        read_hudi_metadata_base(newest_abs),
-    )
+    raw = read_state(newest_abs, pub)
+    if raw is None:
+        raise FileNotFoundError(f"listed slice vanished: {newest_abs}")
+    return (_mdt_slice_instant(newest),
+            read_hudi_metadata_base_bytes(raw, name=newest_abs))
 
 
 def _mdt_delta_records(
@@ -1605,7 +1524,7 @@ def _sync_bloom_partition(
     instant: str,
     known: dict,
     mdt_state: dict,
-    pub: _Publisher,
+    pub: Publisher,
 ) -> dict | None:
     """Refresh `.hoodie/metadata/bloom_filters` (r11): Hudi's
     bloom-filter metadata index in the same HFile-base + log-chain
@@ -1965,7 +1884,7 @@ def _rli_keys_driver(paths: list[str]) -> dict[str, list[str]] | None:
 
 
 def _rli_write_shard(
-    pub: _Publisher,
+    pub: Publisher,
     rli_dir: str,
     shard: int,
     attach: str,
@@ -2002,7 +1921,7 @@ def _rli_write_shard(
 
 
 def _rli_fold_shard(
-    rli_dir: str, group: str, pub: _Publisher | None = None
+    rli_dir: str, group: str, pub: Publisher | None = None
 ) -> dict[str, dict]:
     """Fold ONE shard's newest base slice + attached log chain:
     {key: loc-dict}. Metadata-scale — memory is bounded by a single
@@ -2013,7 +1932,7 @@ def _rli_fold_shard(
     out: dict[str, dict] = {}
     # a generator raises lazily: materialize the existence check by
     # probing for any slice of this group before iterating
-    names = pub.list_rel(rli_dir) if pub is not None else os.listdir(rli_dir)
+    names = list_state(rli_dir, pub)
     if not any(
         n.startswith(f"{group}_") or n.startswith(f".{group}_")
         for n in names
@@ -2048,7 +1967,7 @@ def _rli_write_spark(
     version: int,
     instant: str,
     schema: str,
-    pub: _Publisher,
+    pub: Publisher,
     as_base: bool = False,
 ) -> list[dict]:
     """The DISTRIBUTED index write (the 100 TB path): Spark reads ONLY
@@ -2197,7 +2116,7 @@ def _rli_write_spark(
 
 
 def _rli_write_shard_base(
-    pub: _Publisher, rli_dir: str, shard: int, instant: str,
+    pub: Publisher, rli_dir: str, shard: int, instant: str,
     records: list[dict],
 ) -> dict:
     """One shard's BASE slice (bootstrap / roll-up): an HFile in the
@@ -2209,7 +2128,7 @@ def _rli_write_shard_base(
 
 
 def _rli_compact_shard(
-    pub: _Publisher, rli_dir: str, group: str, shard: int, instant: str
+    pub: Publisher, rli_dir: str, group: str, shard: int, instant: str
 ) -> tuple[int, str, int, int]:
     """Fold ONE shard's base+chain and write its compacted BASE
     slice — the per-shard unit both the driver loop and the
@@ -2227,7 +2146,7 @@ def _rli_compact_spark(
     rli_dir: str,
     n_shards: int,
     instant: str,
-    pub: _Publisher,
+    pub: Publisher,
 ) -> list[dict]:
     """DISTRIBUTED chain compaction: one task per shard folds that
     shard's base+chain and writes the compacted base slice — memory
@@ -2265,7 +2184,7 @@ def _sync_rli_partition(
     instant: str,
     known: dict,
     mdt_state: dict,
-    pub: _Publisher,
+    pub: Publisher,
     shards: int | None = None,
 ) -> list[dict] | None:
     """Refresh `.hoodie/metadata/record_index`: per sync a delta of
@@ -2618,7 +2537,7 @@ def _sync_colstats_partition(
     instant: str,
     known: dict,
     mdt_state: dict,
-    pub: _Publisher,
+    pub: Publisher,
 ) -> dict | None:
     """Refresh `.hoodie/metadata/column_stats` (r11): Hudi's
     column-stats metadata index as HoodieLogFormat delta chains —
@@ -2736,24 +2655,21 @@ def _sync_colstats_partition(
     return stat
 
 
-def _mdt_index_records(idx_dir: str, group: str, pub: _Publisher | None = None):
+def _mdt_index_records(idx_dir: str, group: str, pub: Publisher | None = None):
     """Yield the records of a metadata-index file group in fold
-    order: the newest BASE slice's records first (r11 late — the
-    fixture's base+log shape), then the log chain attached to that
-    base's instant in version order. Legacy pure-chain layouts (no
-    base) fold the newest chain alone. With `pub` every byte rides
-    the store seam (VERDICT r13 #5: a non-materializing store can
-    run compaction folds); without it, direct file I/O for the
-    external-reader APIs."""
-    from onehouse_demos_spark.tables.hudi_log import (
-        parse_log_bytes,
-        parse_log_file,
-    )
+    order: the newest BASE slice's records first (the fixture's
+    base+log shape), then the log chain attached to that base's
+    instant in version order. Legacy pure-chain layouts (no base)
+    fold the newest chain alone. With `pub` every byte rides the
+    store seam (so a non-materializing store can run compaction
+    folds); without it, direct file I/O for the external-reader
+    APIs."""
+    from onehouse_demos_spark.tables.hudi_log import parse_log_bytes
 
     base = _mdt_index_base_records(idx_dir, group, pub)
     prefix = f".{group}_"
     chains: dict[str, list[tuple[int, str]]] = {}
-    names = pub.list_rel(idx_dir) if pub is not None else os.listdir(idx_dir)
+    names = list_state(idx_dir, pub)
     for n in names:
         if not n.startswith(prefix) or ".log." not in n:
             continue
@@ -2769,14 +2685,10 @@ def _mdt_index_records(idx_dir: str, group: str, pub: _Publisher | None = None):
         yield from records
     for _ver, n in sorted(chains.get(attach, [])):
         abs_n = os.path.join(idx_dir, n)
-        if pub is not None:
-            raw = pub.get_bytes(abs_n)
-            if raw is None:
-                raise FileNotFoundError(f"listed log vanished: {abs_n}")
-            blocks = parse_log_bytes(raw, name=abs_n)
-        else:
-            blocks = parse_log_file(abs_n)
-        for block in blocks:
+        raw = read_state(abs_n, pub)
+        if raw is None:
+            raise FileNotFoundError(f"listed log vanished: {abs_n}")
+        for block in parse_log_bytes(raw, name=abs_n):
             yield from block.get("records") or []
 
 
@@ -2827,13 +2739,12 @@ def _sync_metadata_table(
     bloom_filters: bool = False,
     record_index: bool = False,
     record_index_shards: int = _MDT_RLI_DEFAULT_SHARDS,
-    pub: _Publisher | None = None,
+    pub: Publisher | None = None,
 ) -> None:
-    """Refresh `.hoodie/metadata/files` — Hudi's own base+log shape
-    (r11, VERDICT r10 missing #2): the bootstrap sync writes ONE
-    full-listing base slice of the `files-0000-0` file group (a REAL
-    HBase HFile v3 since late-r11 — tables/hfile.py, the fixture's
-    own container), and
+    """Refresh `.hoodie/metadata/files` — Hudi's own base+log shape:
+    the bootstrap sync writes ONE full-listing base slice of the
+    `files-0000-0` file group (a REAL HBase HFile v3 — tables/hfile.py,
+    the fixture's own container), and
     every later sync appends a real HoodieLogFormat AVRO-data-block
     log file (`.files-0000-0_<baseInstant>.log.<v>_0-0-0`, the
     fixture's exact naming) holding HoodieMetadataPayload DELTA
@@ -2854,7 +2765,7 @@ def _sync_metadata_table(
     mdt_hoodie = os.path.join(mdt, _HOODIE_DIR)
     files_dir = os.path.join(mdt, "files")
     if pub is None:
-        pub = _publisher(table)
+        pub = publisher(table.base_path)
     first = not pub.list_rel(mdt_hoodie)  # seam LIST, not a local isdir
     os.makedirs(mdt_hoodie, exist_ok=True)
     os.makedirs(files_dir, exist_ok=True)
@@ -3064,18 +2975,18 @@ def hudi_metadata_listing(base_path: str) -> dict[str, dict[str, int]]:
 def clean_hudi_personality(
     table: LakehouseTable, keep_last_instants: int = 10, store=None
 ) -> dict:
-    """Serialized like the sync (same `.hoodie`-scoped mutex, r11):
+    """Serialized like the sync (same `.hoodie`-scoped mutex):
     clean rewrites the shared sync state, so it must not interleave
     with a concurrent syncer's read-modify-write. Deletes and the
     archival moves flow through the same ObjectStoreClient contract
-    as the sync's publishes (VERDICT r11 #3)."""
+    as the sync's publishes."""
     hoodie = _hoodie_dir(table)
     os.makedirs(hoodie, exist_ok=True)
     provider = table.timeline.lock_provider.scoped(hoodie)
     provider.acquire_mutex("hudi_sync")
     try:
         return _clean_hudi_personality_locked(
-            table, keep_last_instants, _publisher(table, store)
+            table, keep_last_instants, publisher(table.base_path, store)
         )
     finally:
         provider.release_mutex("hudi_sync")
@@ -3083,10 +2994,10 @@ def clean_hudi_personality(
 
 def _clean_hudi_personality_locked(
     table: LakehouseTable, keep_last_instants: int = 10,
-    pub: _Publisher | None = None,
+    pub: Publisher | None = None,
 ) -> dict:
     """Age out retired Hudi-named slices and archive their timeline
-    instants (Hudi clean + timeline archival semantics, r10): slices
+    instants (Hudi clean + timeline archival semantics): slices
     retired by instants OLDER than the last `keep_last_instants` sync
     instants are unlinked, and completed timeline files older than
     that horizon move to `.hoodie/archived/` (the directory the
@@ -3099,7 +3010,7 @@ def _clean_hudi_personality_locked(
     drops superseded metadata-table slices past the horizon."""
     hoodie = _hoodie_dir(table)
     if pub is None:
-        pub = _publisher(table)
+        pub = publisher(table.base_path)
     state = _load_state(hoodie, pub)
     instants = state["instants"]
     if len(instants) <= keep_last_instants:
@@ -3113,8 +3024,8 @@ def _clean_hudi_personality_locked(
             del state["retired"][rel]
     arch_dir = os.path.join(hoodie, "archived")
     archived: list[str] = []
-    # writer-internal timeline scan through the store LIST (ADVICE r12
-    # #1): clean must see the same keyspace it publishes/deletes into,
+    # writer-internal timeline scan through the store LIST: clean
+    # must see the same keyspace it publishes/deletes into,
     # or a non-materializing store would make archival a silent no-op
     for name in pub.list_rel(hoodie):
         m = _COMPLETED_RE.match(name)
@@ -3170,7 +3081,7 @@ def _clean_hudi_personality_locked(
                 attached = n[len(_MDT_FILE_GROUP) + 2 :].split(".log.")[0]
                 if attached != newest_inst and attached < boundary:
                     pub.delete(os.path.join(files_dir, n))
-    # metadata-index partitions (r11): base slices + chains
+    # metadata-index partitions: base slices + chains
     # superseded by a roll-up (attachment instant older than the
     # newest base's) age out the same way; sharded record_index
     # groups age independently, newest attachment per GROUP survives

@@ -27,12 +27,8 @@ CDC path golden-byte-pinned against the published Avro spec
 
 Personality semantics mirror the Delta exporter: snapshot = live BASE
 files plus the exported log delta, engine meta columns exposed like
-Hudi's `_hoodie_*`, refusal to export base files whose footer stats
-show live soft-delete tombstone ROWS. Un-compacted MOR LOG content no
-longer refuses and no longer goes stale: the sync computes the
-group-pruned base-vs-realtime delta (tables/rt_delta.py — only the
-log-bearing file groups are scanned) and exports it in the spec's own
-vocabulary (r13 deletes, r14 updates/inserts):
+Hudi's `_hoodie_*`. Un-compacted MOR LOG content is exported in the
+spec's own vocabulary:
 
 - EQUALITY DELETE files (content=2, `equality_ids` on the record key,
   partition-scoped parquet of `_oh_record_key`) mask every base row
@@ -45,26 +41,28 @@ vocabulary (r13 deletes, r14 updates/inserts):
   exactly the Flink CDC upsert commit shape.
 
 The personality therefore serves EXACTLY the rows the engine's
-real-time merge serves — updates, inserts and deletes alike
-(reference `_rt`, `README.md:756-776`). Superseded delete/winner
-generations from earlier syncs are reclaimed by
-``expire_iceberg_snapshots`` (the expire-snapshots analog: retained
-history re-published through the conditional-put commit point, then
-personality-owned orphans deleted through the seam). Tables declared
-with `partition_by`
+real-time merge serves (reference `_rt`, `README.md:756-776`).
+Superseded delete/winner generations from earlier syncs are reclaimed
+by ``expire_iceberg_snapshots``. Tables declared with `partition_by`
 export a real identity partition spec (spec fields with ids from 1000,
-per-file typed `partition` structs decoded from the hive path —
-matching the reference's converted tables,
-`xtable/xtable_hudi.yaml:17-25` `partitionSpec: city:VALUE`) so
-Iceberg planners prune manifest entries by partition without opening
-footers; identity partitioning keeps the source column physical in the
-data files, which ours are. Derived `partition_expr` tables export
-unpartitioned (no physical source column to declare). Each sync appends one
-snapshot whose single manifest lists the full live file set (spec-
-legal; incremental manifest reuse is an optimization, not a
-correctness requirement). Validation without an Iceberg runtime in
-the sandbox: spec-structural checks + OCF round-trip + file-set and
-row-count parity with the engine snapshot (tests/test_iceberg_export.py).
+per-file typed `partition` structs — matching the reference's
+converted tables, `xtable/xtable_hudi.yaml:17-25`
+`partitionSpec: city:VALUE`) so Iceberg planners prune manifest
+entries by partition without opening footers. Each sync appends one
+snapshot whose data manifest lists the full live file set (spec-legal;
+incremental manifest reuse is an optimization, not a correctness
+requirement).
+
+Shared layer vs. this module: tables/personality.py decides what is
+exported (tombstone guards, partition columns, the group-pruned
+base-vs-realtime delta), how partition values decode (this module
+maps them to typed values), how eqdel/morrow part files are staged,
+how writer state is read, when an unreferenced owned object may be
+deleted and how name-mapped columns are read back; metadata.json is
+committed through `Publisher.commit` (conditional put). This module
+keeps only Iceberg's serialisation: field-id schemas, partition specs,
+Avro manifests and manifest lists, sequence numbers, table metadata,
+the version hint and the manifest-walking reader.
 """
 
 from __future__ import annotations
@@ -76,13 +74,18 @@ import time
 import uuid
 
 from onehouse_demos_spark.sources.avro_codec import read_ocf, write_ocf
-from onehouse_demos_spark.tables.delta_export import _assert_no_tombstones
 from onehouse_demos_spark.tables.object_publish import Publisher, publisher
-from onehouse_demos_spark.tables.table import (
-    HIVE_DEFAULT_PARTITION,
-    PP_COL,
-    LakehouseTable,
+from onehouse_demos_spark.tables.personality import (
+    assert_no_tombstones,
+    partition_columns,
+    partition_values,
+    read_physical,
+    read_state,
+    rt_delta,
+    stage_parts,
+    sweep_orphans,
 )
+from onehouse_demos_spark.tables.table import PP_COL, LakehouseTable
 
 _META_DIR = "metadata"
 #: Iceberg convention: partition-spec field ids start at 1000.
@@ -124,6 +127,17 @@ def _iceberg_type(dt) -> object:
     raise NotImplementedError(f"no Iceberg mapping for {dt}")
 
 
+def _mapped_names(meta: dict) -> dict[int, str]:
+    """field id -> PHYSICAL on-file name from the table's name mapping
+    (`schema.name-mapping.default`; empty when no column was renamed)."""
+    nm_raw = (meta.get("properties") or {}).get("schema.name-mapping.default")
+    return {
+        e["field-id"]: e["names"][0]
+        for e in json.loads(nm_raw or "[]")
+        if e.get("names")
+    }
+
+
 def _iceberg_schema(
     table: LakehouseTable, prev_meta: dict | None = None
 ) -> tuple[dict, dict]:
@@ -150,14 +164,7 @@ def _iceberg_schema(
             for s in prev_meta["schemas"]
             if s["schema-id"] == prev_meta["current-schema-id"]
         )
-        names_by_id: dict[int, str] = {}
-        nm_raw = (prev_meta.get("properties") or {}).get(
-            "schema.name-mapping.default"
-        )
-        if nm_raw:
-            for e in json.loads(nm_raw):
-                if e.get("names"):
-                    names_by_id[e["field-id"]] = e["names"][0]
+        names_by_id = _mapped_names(prev_meta)
         for f in prev_schema["fields"]:
             prev_ids_by_phys[names_by_id.get(f["id"], f["name"])] = f["id"]
         next_id = prev_meta.get("last-column-id", 0) + 1
@@ -209,9 +216,9 @@ def _avro_partition_type(ice_type: str) -> object:
     )
 
 
-def _decode_partition_value(raw: str, ice_type: str):
-    """Typed identity partition value from its hive path segment."""
-    if raw == HIVE_DEFAULT_PARTITION:
+def _decode_partition_value(raw: str | None, ice_type: str):
+    """Typed identity partition value from its decoded string."""
+    if raw is None:
         return None
     if ice_type in ("int", "long"):
         return int(raw)
@@ -233,7 +240,7 @@ def _partition_spec(table: LakehouseTable, schema: dict) -> list[dict]:
     source-ids resolved against the exported schema and field-ids from
     the spec's conventional 1000 range. Derived `partition_expr`
     tables (no physical source column) export an unpartitioned spec."""
-    cols = list(table.config.partition_by or [])
+    cols = partition_columns(table)
     if not cols:
         return []
     by_name = {f["name"]: f for f in schema["fields"]}
@@ -252,7 +259,7 @@ def _partition_spec(table: LakehouseTable, schema: dict) -> list[dict]:
             # Degrade to an unpartitioned spec (still a correct,
             # readable personality — file pruning just isn't offered)
             # rather than failing the whole sync for e.g. a
-            # timestamp/decimal partition column (ADVICE r4).
+            # timestamp/decimal partition column.
             import warnings
 
             warnings.warn(
@@ -276,24 +283,15 @@ def _partition_spec(table: LakehouseTable, schema: dict) -> list[dict]:
 def _partition_struct_values(
     fm, spec_fields: list[dict], schema: dict
 ) -> dict:
-    """Per-file typed `partition` struct decoded from the hive path
-    ('/'-joined on the write side, mirroring
-    delta_export._partition_values)."""
-    if not spec_fields:
-        return {}
-    parts = (fm.partition or "").split("/")
-    if len(parts) != len(spec_fields):
-        raise RuntimeError(
-            f"file {fm.path}: partition path {fm.partition!r} does not "
-            f"decode into {len(spec_fields)} value(s) for spec "
-            f"{[f['name'] for f in spec_fields]}"
-        )
+    """Per-file typed `partition` struct: the shared partition decode,
+    typed per spec field."""
     by_id = {f["id"]: f for f in schema["fields"]}
+    values = partition_values(fm, [pf["name"] for pf in spec_fields])
     return {
         pf["name"]: _decode_partition_value(
-            raw, by_id[pf["source-id"]]["type"]
+            values[pf["name"]], by_id[pf["source-id"]]["type"]
         )
-        for pf, raw in zip(spec_fields, parts)
+        for pf in spec_fields
     }
 
 
@@ -337,8 +335,7 @@ def _manifest_entry_schema(
     ]
     if deletes:
         # spec field 135: the schema field ids an equality delete file
-        # matches on — only delete manifests carry it, so the data
-        # manifest byte shape is unchanged from pre-r13 syncs.
+        # matches on — only delete manifests carry it.
         fields.append(
             {
                 "name": "equality_ids",
@@ -392,17 +389,6 @@ def _meta_dir(table: LakehouseTable) -> str:
     return os.path.join(table.base_path, _META_DIR)
 
 
-# --------------------------------- v2 equality deletes + update export
-
-# The group-pruned base-vs-realtime delta is shared with the Delta
-# exporter's COW rewrite lane (tables/rt_delta.py); this module keeps
-# the historical underscore names its tests and callers use.
-from onehouse_demos_spark.tables.rt_delta import (  # noqa: E402
-    _overlapping,  # noqa: F401 — re-exported for tests
-    rt_delta as _rt_delta,
-)
-
-
 def _frame_digest(df, cols: list[str]) -> str:
     """Order-free change-detection digest of a key/version frame:
     exact count + xxhash64 sum (DECIMAL — overflow-free). Cheap
@@ -416,114 +402,6 @@ def _frame_digest(df, cols: list[str]) -> str:
         ).alias("h"),
     ).first()
     return f"{row.n}:{row.h}"
-
-
-def _publish_part_files(
-    table: LakehouseTable,
-    df,
-    part_cols: list[str],
-    spec_fields: list[dict],
-    schema: dict,
-    pub: Publisher,
-    prefix: str,
-) -> list[dict]:
-    """Write a frame as parquet files named `<prefix>-<uuid>.parquet`
-    — partition-scoped when the table is partitioned (executors write
-    per-partition part files in parallel; each becomes one manifest
-    entry, pruning-friendly for spec-aware planners), one global set
-    otherwise — and publish each through the store seam. Shared by
-    the EQUALITY DELETE export (`eqdel`) and the log-borne
-    update/insert data export (`morrow`, r14). Staging lives OUTSIDE
-    the table directory (tempfile — r13 review: a crash must not
-    leave a staging tree inside the published layout). Returns
-    manifest-entry payloads [{path, partition, rows, size}]."""
-    import shutil
-    import tempfile
-    from urllib.parse import unquote
-
-    import pyarrow.parquet as pq
-
-    from onehouse_demos_spark.tables.table import HIVE_DEFAULT_PARTITION
-
-    from pyspark.sql import functions as F
-
-    staging = tempfile.mkdtemp(prefix="oh_ice_staging_")
-    # Partition the staged write by SHADOW copies of the partition
-    # columns: Spark's partitionBy strips the partitioning column from
-    # the parquet data, but identity-partitioned Iceberg data files
-    # must carry the source column physically (the base files do) —
-    # without this, appended rows read back with a null partition
-    # column (r14 fix, caught by the update-export oracle).
-    shadow = [f"_oh_stage_pp_{i}" for i in range(len(part_cols))]
-    stage_df = df
-    for s, c in zip(shadow, part_cols):
-        stage_df = stage_df.withColumn(s, F.col(c))
-    writer = stage_df.write.mode("overwrite")
-    if part_cols:
-        writer = writer.partitionBy(*shadow)
-    writer.parquet(staging)
-    by_id = {f["id"]: f for f in schema["fields"]}
-    shadow_of = {
-        pf["name"]: shadow[i] for i, pf in enumerate(spec_fields)
-    }
-    out: list[dict] = []
-    try:
-        for dirpath, _dirs, names in os.walk(staging):
-            rel = os.path.relpath(dirpath, staging)
-            for n in names:
-                if not (n.endswith(".parquet") and n.startswith("part-")):
-                    continue
-                src = os.path.join(dirpath, n)
-                rows = pq.ParquetFile(src).metadata.num_rows
-                if rows == 0:
-                    continue
-                # decode hive `col=value` segments into the typed
-                # partition struct of spec 0
-                values: dict = {}
-                if rel != ".":
-                    segs = dict(
-                        s.split("=", 1) for s in rel.split(os.sep)
-                    )
-                    for pf in spec_fields:
-                        raw = unquote(segs[shadow_of[pf["name"]]])
-                        values[pf["name"]] = (
-                            None
-                            if raw == HIVE_DEFAULT_PARTITION
-                            else _decode_partition_value(
-                                raw, by_id[pf["source-id"]]["type"]
-                            )
-                        )
-                part_dir = (
-                    "/".join(
-                        f"{pf['name']}={segs[shadow_of[pf['name']]]}"
-                        for pf in spec_fields
-                    )
-                    if rel != "."
-                    else ""
-                )
-                dst = os.path.join(
-                    table.base_path,
-                    part_dir,
-                    f"{prefix}-{uuid.uuid4().hex}.parquet",
-                )
-                pub.put_file(dst, src)
-                out.append(
-                    {
-                        "path": dst,
-                        "partition": values,
-                        "rows": rows,
-                        "size": os.path.getsize(src),
-                    }
-                )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-    if not out:
-        raise RuntimeError(
-            f"{prefix} export: the change digest saw rows but none "
-            "were staged — refusing to publish a personality that "
-            "would diverge from the real-time view"
-        )
-    return out
 
 
 def _rebase(stored: str, meta_location: str, table_path: str) -> str:
@@ -588,20 +466,27 @@ def _prev_file_seqs(
 
 
 def _current_version(meta_dir: str, pub: Publisher | None = None) -> int:
-    """Version per `version-hint.text` — through the store seam when
-    the caller is the writer (pub given), direct file I/O for the
-    external readers below."""
-    hint = os.path.join(meta_dir, "version-hint.text")
+    """Version per `version-hint.text` (0 when absent)."""
+    raw = read_state(os.path.join(meta_dir, "version-hint.text"), pub)
     try:
-        if pub is not None:
-            raw = pub.get_bytes(hint)
-            if raw is None:
-                return 0
-            return int(raw.decode("utf-8").strip())
-        with open(hint) as fh:
-            return int(fh.read().strip())
-    except (FileNotFoundError, ValueError):
+        return int(raw.decode("utf-8").strip()) if raw is not None else 0
+    except ValueError:
         return 0
+
+
+def _head_version(meta_dir: str, pub: Publisher) -> int:
+    """The writer's true head version. The hint is a HINT: a writer
+    that crashed between the metadata.json commit point and the hint
+    put leaves it one behind, and trusting it would make a healthy
+    retry re-mint the published version. Probe forward with HEADs (the
+    HadoopTables recovery; metadata.json grows with history, so never
+    GET it just to test existence) and repair a lagging hint."""
+    hinted = version = _current_version(meta_dir, pub)
+    while pub.exists(os.path.join(meta_dir, f"v{version + 1}.metadata.json")):
+        version += 1
+    if version != hinted:
+        pub.put_text(os.path.join(meta_dir, "version-hint.text"), str(version))
+    return version
 
 
 def sync_iceberg_metadata(
@@ -614,34 +499,19 @@ def sync_iceberg_metadata(
     manifest → the table's own parquet.
 
     Every write flows through the ObjectStoreClient S3 contract
-    (tables/object_publish.py, VERDICT r12 #1): manifests and manifest
-    lists are uuid-named atomic full-object puts, the metadata.json is
-    the COMMIT POINT (`PutObject + If-None-Match: *` — exactly one
-    syncer owns version N), and version-hint.text is a last-writer-
-    wins hint put. Writer-internal state reads (hint + previous
-    metadata) ride the same seam; external readers below stay direct
-    file I/O over the materialized layout."""
+    (tables/object_publish.py): manifests and manifest lists are
+    uuid-named atomic full-object puts, the metadata.json is the
+    commit point (`Publisher.commit` — exactly one syncer owns version
+    N), and version-hint.text is a last-writer-wins hint put.
+    Writer-internal state reads (hint + previous metadata) ride the
+    same seam; external readers below stay direct file I/O over the
+    materialized layout."""
     now_ms = int(time.time() * 1000) if now_ms is None else now_ms
     files = table.manifest.live_files(include_logs=False)
-    _assert_no_tombstones(files)
+    assert_no_tombstones(files)
     meta_dir = _meta_dir(table)
     pub = publisher(table.base_path, store)
-    version = _current_version(meta_dir, pub)
-    # The hint is a HINT: a writer that crashed between the
-    # metadata.json commit point and the hint put leaves the hint one
-    # behind, and trusting it would make the healthy retry re-mint the
-    # already-published version (conditional-put conflict on a
-    # no-contention retry). Probe forward to the true head — the same
-    # recovery HadoopTables clients perform — and repair the hint.
-    hinted = version
-    while pub.exists(
-        os.path.join(meta_dir, f"v{version + 1}.metadata.json")
-    ):  # HEAD probe — metadata.json grows with history; never GET it
-        # just to test existence (r13 review)
-        version += 1
-    if version != hinted:
-        pub.put_text(os.path.join(meta_dir, "version-hint.text"),
-                     str(version))
+    version = _head_version(meta_dir, pub)
     prev_meta = None
     if version:
         raw = pub.get_bytes(
@@ -655,18 +525,15 @@ def sync_iceberg_metadata(
         prev_meta = json.loads(raw)
 
     schema, phys_map = _iceberg_schema(table, prev_meta)
-    part_cols = list(table.config.partition_by or [])
     # Un-compacted MOR log content: export v2 EQUALITY DELETES for
     # deleted AND updated keys plus an appended data file of the
-    # log-borne winners (r13 deletes, r14 updates/inserts) instead of
-    # serving stale base rows — the personality then matches the
-    # engine's real-time merge exactly. Both change sets enter the
-    # version digest so a new log write (or a compaction clearing the
-    # logs) produces a new version even with an unchanged base-file
-    # set.
+    # log-borne winners instead of serving stale base rows. Both change
+    # sets enter the version digest so a new log write (or a compaction
+    # clearing the logs) produces a new version even with an unchanged
+    # base-file set.
     from onehouse_demos_spark.tables.table import COMMIT_COL, KEY_COL
 
-    delta = _rt_delta(table, part_cols)
+    delta = rt_delta(table, partition_columns(table))
     eqdel = new_rows = None
     del_digest = upd_digest = "0:None"
     if delta is not None:
@@ -692,7 +559,7 @@ def sync_iceberg_metadata(
 
     # Everything from digesting to manifest publication can raise
     # (conditional-put conflicts, publish failures): the cached delta
-    # frames must not outlive the attempt (r14 review).
+    # frames must not outlive the attempt.
     try:
         paths = sorted(f.path for f in files)
         # A metadata-only schema change (RENAME/DROP COLUMN) must produce a
@@ -715,22 +582,102 @@ def sync_iceberg_metadata(
         snapshot_id = int(
             hashlib.sha256(f"{digest}:{seq}".encode()).hexdigest()[:15], 16
         )
+        spec_fields = _partition_spec(table, schema)
+        record = _partition_record_schema(spec_fields, schema)
+        manifest_rows: list[dict] = []
 
-        # ---- manifest (one per snapshot, full live file set). Files seen
-        # in a previous sync re-enter as status=EXISTING with their
+        def add_manifest(n, entries, content, seq_n, min_seq, snap_id,
+                         n_added, added_rows, existing_rows=0):
+            """Publish manifest `-m<n>` (0 base data, 1 equality
+            deletes, 2 log winners) and list it in `manifest_rows`."""
+            raw = write_ocf(
+                entries,
+                _manifest_entry_schema(record, deletes=content == 1),
+                extra_meta={
+                    "schema": json.dumps(schema),
+                    "schema-id": "0",
+                    "partition-spec": json.dumps(spec_fields),
+                    "partition-spec-id": "0",
+                    "format-version": "2",
+                    "content": "deletes" if content else "data",
+                },
+            )
+            path = os.path.join(meta_dir, f"{uuid.uuid4().hex}-m{n}.avro")
+            pub.put_bytes(path, raw)  # uuid-named, atomic
+            manifest_rows.append(
+                {
+                    "manifest_path": path,
+                    "manifest_length": len(raw),
+                    "partition_spec_id": 0,
+                    "content": content,
+                    "sequence_number": seq_n,
+                    "min_sequence_number": min_seq,
+                    "added_snapshot_id": snap_id,
+                    "added_files_count": n_added,
+                    "existing_files_count": len(entries) - n_added,
+                    "deleted_files_count": 0,
+                    "added_rows_count": added_rows,
+                    "existing_rows_count": existing_rows,
+                    "deleted_rows_count": 0,
+                }
+            )
+
+        def staged_entries(df, prefix, content, **extra):
+            """Stage `df` partition-scoped under the spec (each part
+            file is one pruning-friendly manifest entry), publish every
+            part file as `<prefix>-<uuid>.parquet` and return its
+            entries, ADDED by this snapshot at the inherited (NEW)
+            sequence."""
+            from onehouse_demos_spark.tables.timeline import FileMeta
+
+            out = []
+            with stage_parts(df, [pf["name"] for pf in spec_fields]) as parts:
+                for src, part_dir, values, pf in parts:
+                    dst = os.path.join(
+                        table.base_path, part_dir,
+                        f"{prefix}-{uuid.uuid4().hex}.parquet",
+                    )
+                    pub.put_file(dst, src)
+                    fm = FileMeta(path=dst, partition="/".join(values) or None)
+                    out.append({
+                        "status": 1,  # ADDED
+                        "snapshot_id": snapshot_id,
+                        "sequence_number": None,
+                        "file_sequence_number": None,
+                        "data_file": {
+                            "content": content,
+                            "file_path": dst,
+                            "file_format": "PARQUET",
+                            "partition": _partition_struct_values(
+                                fm, spec_fields, schema
+                            ),
+                            "record_count": pf.metadata.num_rows,
+                            "file_size_in_bytes": os.path.getsize(src),
+                            **extra,
+                        },
+                    })
+            if not out:
+                raise RuntimeError(
+                    f"{prefix} export: the change digest saw rows but none "
+                    "were staged — refusing to publish a personality that "
+                    "would diverge from the real-time view"
+                )
+            return out
+
+        # ---- data manifest (one per snapshot, full live file set). Files
+        # seen in a previous sync re-enter as status=EXISTING with their
         # FIRST-export sequence number made explicit (spec-required for
         # re-listed files; also what makes equality deletes — strictly
         # newer sequence — apply to them). New files inherit this
         # snapshot's sequence.
-        spec_fields = _partition_spec(table, schema)
         prev_seqs = _prev_file_seqs(prev_meta, pub, table.base_path)
         n_added = sum(1 for fm in files if fm.path not in prev_seqs)
         # Two-snapshot shape decided BEFORE the manifest is written so the
         # data manifest's attribution (entry snapshot_id + the manifest
         # row's added_snapshot_id) names the APPEND snapshot consistently
-        # in both manifest lists (r13 review: a reused row claiming the
-        # delete snapshot's id mis-attributes adds to time-travel and
-        # incremental consumers).
+        # in both manifest lists: a row claiming the delete snapshot's id
+        # would mis-attribute adds to time-travel and incremental
+        # consumers.
         two_snapshots = (
             eqdel is not None or new_rows is not None
         ) and n_added > 0
@@ -740,12 +687,9 @@ def sync_iceberg_metadata(
         )
         data_snap_id = snap_a_id if two_snapshots else snapshot_id
         entries = []
-        total_rows = 0
         added_rows = existing_rows = 0
         for fm in files:
             abs_path = os.path.join(table.base_path, fm.path)
-            size = os.path.getsize(abs_path)
-            total_rows += fm.rows
             known_seq = prev_seqs.get(fm.path)
             if known_seq is None:
                 added_rows += fm.rows
@@ -765,53 +709,21 @@ def sync_iceberg_metadata(
                             fm, spec_fields, schema
                         ),
                         "record_count": fm.rows,
-                        "file_size_in_bytes": size,
+                        "file_size_in_bytes": os.path.getsize(abs_path),
                     },
                 }
             )
-        manifest_name = f"{uuid.uuid4().hex}-m0.avro"
-        manifest_bytes = write_ocf(
-            entries,
-            _manifest_entry_schema(
-                _partition_record_schema(spec_fields, schema)
-            ),
-            extra_meta={
-                "schema": json.dumps(schema),
-                "schema-id": "0",
-                "partition-spec": json.dumps(spec_fields),
-                "partition-spec-id": "0",
-                "format-version": "2",
-                "content": "data",
-            },
-        )
-        manifest_path = os.path.join(meta_dir, manifest_name)
-        pub.put_bytes(manifest_path, manifest_bytes)  # uuid-named, atomic
-
         # min_sequence_number over the sequences of the entries ACTUALLY
-        # listed (r13 review: min over all previous sequences could
-        # understate the true minimum when a file dropped out)
+        # listed (a file that dropped out must not understate it)
         entry_seqs = [
             e["sequence_number"]
             for e in entries
             if e["sequence_number"] is not None
         ] + ([seq] if n_added else [])
-        manifest_rows = [
-            {
-                "manifest_path": manifest_path,
-                "manifest_length": len(manifest_bytes),
-                "partition_spec_id": 0,
-                "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": min(entry_seqs) if entry_seqs else seq,
-                "added_snapshot_id": data_snap_id,
-                "added_files_count": n_added,
-                "existing_files_count": len(entries) - n_added,
-                "deleted_files_count": 0,
-                "added_rows_count": added_rows,
-                "existing_rows_count": existing_rows,
-                "deleted_rows_count": 0,
-            }
-        ]
+        add_manifest(
+            0, entries, 0, seq, min(entry_seqs) if entry_seqs else seq,
+            data_snap_id, n_added, added_rows, existing_rows,
+        )
 
         # ---- equality-delete manifest (only when the merge masks base
         # rows). Deletes must apply to EVERY live base file, so their
@@ -837,71 +749,24 @@ def sync_iceberg_metadata(
                     "equality-delete export needs the record-key column "
                     f"{KEY_COL!r} in the exported schema"
                 )
-            delete_files = _publish_part_files(
-                table, eqdel, part_cols, spec_fields, schema, pub, "eqdel"
+            del_entries = staged_entries(
+                eqdel, "eqdel", 2, equality_ids=[key_fid]  # EQUALITY_DELETES
             )
-            del_entries = [
-                {
-                    "status": 1,  # ADDED
-                    "snapshot_id": snapshot_id,
-                    "sequence_number": None,  # inherit: the NEW sequence
-                    "file_sequence_number": None,
-                    "data_file": {
-                        "content": 2,  # EQUALITY_DELETES
-                        "file_path": de["path"],
-                        "file_format": "PARQUET",
-                        "partition": de["partition"],
-                        "record_count": de["rows"],
-                        "file_size_in_bytes": de["size"],
-                        "equality_ids": [key_fid],
-                    },
-                }
-                for de in delete_files
-            ]
-            n_delete_rows = sum(de["rows"] for de in delete_files)
-            del_manifest_name = f"{uuid.uuid4().hex}-m1.avro"
-            del_manifest_bytes = write_ocf(
-                del_entries,
-                _manifest_entry_schema(
-                    _partition_record_schema(spec_fields, schema),
-                    deletes=True,
-                ),
-                extra_meta={
-                    "schema": json.dumps(schema),
-                    "schema-id": "0",
-                    "partition-spec": json.dumps(spec_fields),
-                    "partition-spec-id": "0",
-                    "format-version": "2",
-                    "content": "deletes",
-                },
+            n_delete_rows = sum(
+                e["data_file"]["record_count"] for e in del_entries
             )
-            del_manifest_path = os.path.join(meta_dir, del_manifest_name)
-            pub.put_bytes(del_manifest_path, del_manifest_bytes)
-            manifest_rows.append(
-                {
-                    "manifest_path": del_manifest_path,
-                    "manifest_length": len(del_manifest_bytes),
-                    "partition_spec_id": 0,
-                    "content": 1,  # DELETES
-                    "sequence_number": seq_del,
-                    "min_sequence_number": seq_del,
-                    "added_snapshot_id": snapshot_id,
-                    "added_files_count": len(del_entries),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": n_delete_rows,
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                }
+            add_manifest(
+                1, del_entries, 1, seq_del, seq_del, snapshot_id,
+                len(del_entries), n_delete_rows,
             )
 
-        # ---- log-winner data manifest (r14): the appended parquet of
+        # ---- log-winner data manifest: the appended parquet of
         # log-borne update/insert winners, ADDED at the delete sequence —
         # strictly newer than every base entry (so it is never masked by
         # this sync's equality deletes) and exactly the rows the engine's
         # `_rt` merge serves for those keys.
         n_upd_rows = 0
-        upd_files: list[dict] = []
+        upd_entries: list[dict] = []
         if new_rows is not None:
             from pyspark.sql.functions import col as F_col
 
@@ -914,60 +779,13 @@ def sync_iceberg_metadata(
                     for f in schema["fields"]
                 ]
             )
-            upd_files = _publish_part_files(
-                table, out_rows, part_cols, spec_fields, schema, pub, "morrow"
+            upd_entries = staged_entries(out_rows, "morrow", 0)
+            n_upd_rows = sum(
+                e["data_file"]["record_count"] for e in upd_entries
             )
-            upd_entries = [
-                {
-                    "status": 1,  # ADDED
-                    "snapshot_id": snapshot_id,
-                    "sequence_number": None,  # inherit: the NEW sequence
-                    "file_sequence_number": None,
-                    "data_file": {
-                        "content": 0,  # DATA
-                        "file_path": uf["path"],
-                        "file_format": "PARQUET",
-                        "partition": uf["partition"],
-                        "record_count": uf["rows"],
-                        "file_size_in_bytes": uf["size"],
-                    },
-                }
-                for uf in upd_files
-            ]
-            n_upd_rows = sum(uf["rows"] for uf in upd_files)
-            upd_manifest_name = f"{uuid.uuid4().hex}-m2.avro"
-            upd_manifest_bytes = write_ocf(
-                upd_entries,
-                _manifest_entry_schema(
-                    _partition_record_schema(spec_fields, schema)
-                ),
-                extra_meta={
-                    "schema": json.dumps(schema),
-                    "schema-id": "0",
-                    "partition-spec": json.dumps(spec_fields),
-                    "partition-spec-id": "0",
-                    "format-version": "2",
-                    "content": "data",
-                },
-            )
-            upd_manifest_path = os.path.join(meta_dir, upd_manifest_name)
-            pub.put_bytes(upd_manifest_path, upd_manifest_bytes)
-            manifest_rows.append(
-                {
-                    "manifest_path": upd_manifest_path,
-                    "manifest_length": len(upd_manifest_bytes),
-                    "partition_spec_id": 0,
-                    "content": 0,  # DATA
-                    "sequence_number": seq_del,
-                    "min_sequence_number": seq_del,
-                    "added_snapshot_id": snapshot_id,
-                    "added_files_count": len(upd_entries),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": n_upd_rows,
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                }
+            add_manifest(
+                2, upd_entries, 0, seq_del, seq_del, snapshot_id,
+                len(upd_entries), n_upd_rows,
             )
     finally:
         _unpersist_delta()
@@ -1026,7 +844,7 @@ def sync_iceberg_metadata(
                 # two-snapshot shape; the log-winner file is this
                 # snapshot's own add either way
                 "added-data-files": str(
-                    len(upd_files) + (0 if two_snapshots else n_added)
+                    len(upd_entries) + (0 if two_snapshots else n_added)
                 ),
                 "added-records": str(
                     n_upd_rows + (0 if two_snapshots else added_rows)
@@ -1103,26 +921,18 @@ def sync_iceberg_metadata(
             else []
         ),
     }
-    new_version = version + 1
-    # The COMMIT POINT: `PutObject + If-None-Match: *` through the
-    # store seam — exactly one syncer can own version N, and readers
-    # never observe a torn metadata.json. The manifests above are
-    # uuid-named (collision-free) so only the version file needs the
-    # conditional create.
-    if not pub.put_json(
-        os.path.join(meta_dir, f"v{new_version}.metadata.json"), meta,
-        if_none_match=True,
-    ):
-        raise FileExistsError(
-            f"iceberg metadata v{new_version} already published by a "
-            "concurrent syncer"
-        )
-    # version-hint is a HINT (HadoopTables convention): an atomic
-    # full-object put, so a racing reader sees either the old or the
-    # new version number, never a truncated file.
-    pub.put_text(os.path.join(meta_dir, "version-hint.text"),
-                 str(new_version))
-    return new_version
+    return _commit_version(meta_dir, pub, version + 1, meta)
+
+
+def _commit_version(meta_dir: str, pub: Publisher, version: int, meta) -> int:
+    """Commit `v<version>.metadata.json` (the conditional-put commit
+    point: exactly one writer owns version N; manifests are uuid-named
+    so only this object needs it), then advance the hint — an atomic
+    full-object put, so a racing reader sees the old or the new number,
+    never a truncated file."""
+    pub.commit(os.path.join(meta_dir, f"v{version}.metadata.json"), meta)
+    pub.put_text(os.path.join(meta_dir, "version-hint.text"), str(version))
+    return version
 
 
 def expire_iceberg_snapshots(
@@ -1132,33 +942,27 @@ def expire_iceberg_snapshots(
     store=None,
     orphan_grace_ms: int = 7 * 24 * 3600 * 1000,
 ) -> int:
-    """Iceberg `expire_snapshots` analog for the personality (r13
-    review: superseded equality-delete / log-winner data files from
-    prior syncs were never cleaned). Publishes a new metadata version
-    retaining only the newest `keep_last` snapshots (the current one
-    always survives), then sweeps every personality-OWNED object on
-    disk that NO retained snapshot references: manifest lists,
-    manifests, and the exporter's own `eqdel-*` / `morrow-*` parquet.
-    The sweep runs even when nothing expires, so garbage from a
-    crashed pre-commit sync or an expire that died mid-delete is
-    re-collected by the next call (r14 review). An age guard
+    """Iceberg `expire_snapshots` analog for the personality. Publishes
+    a new metadata version retaining only the newest `keep_last`
+    snapshots (the current one always survives), then sweeps every
+    personality-OWNED object on disk that NO retained snapshot
+    references: manifest lists, manifests, and the exporter's own
+    `eqdel-*` / `morrow-*` parquet. The sweep runs even when nothing
+    expires, so garbage from a crashed pre-commit sync or an expire
+    that died mid-delete is re-collected by the next call. An age guard
     (`orphan_grace_ms`, VACUUM-style) protects objects a concurrent
     in-flight sync has published but not yet committed. Engine-owned
     data files are never candidates — the exporter publishes metadata
-    over them in place, so expiry must not reach them. Every delete
-    flows through the store seam; the metadata commit point is the
-    same `If-None-Match` conditional put the sync uses, so an expire
-    racing a sync fails loudly instead of dropping either's work."""
+    over them in place, so expiry must not reach them. The metadata
+    commit point is the same conditional put the sync uses, so an
+    expire racing a sync fails loudly instead of dropping either's
+    work."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     now_ms = int(time.time() * 1000) if now_ms is None else now_ms
     meta_dir = _meta_dir(table)
     pub = publisher(table.base_path, store)
-    version = _current_version(meta_dir, pub)
-    while pub.exists(
-        os.path.join(meta_dir, f"v{version + 1}.metadata.json")
-    ):
-        version += 1
+    version = _head_version(meta_dir, pub)
     if not version:
         raise FileNotFoundError(
             f"no iceberg metadata under {table.base_path}"
@@ -1166,60 +970,40 @@ def expire_iceberg_snapshots(
     raw = pub.get_bytes(os.path.join(meta_dir, f"v{version}.metadata.json"))
     meta = json.loads(raw)
     snapshots = meta.get("snapshots", [])
-    loc0 = meta.get("location", table.base_path)
-    if len(snapshots) <= keep_last:
-        # nothing to expire from history — still sweep orphans
-        _sweep_iceberg_orphans(
-            table, pub,
-            _iceberg_refs(pub, table.base_path, loc0, snapshots),
-            now_ms, orphan_grace_ms,
-        )
-        return version
     keep = snapshots[-keep_last:]
     current_id = meta.get("current-snapshot-id")
     if current_id not in {s["snapshot-id"] for s in keep}:
         keep = [
             s for s in snapshots if s["snapshot-id"] == current_id
         ] + keep
-    keep_ids = {s["snapshot-id"] for s in keep}
-    loc = meta.get("location", table.base_path)
-
-    kept_refs = _iceberg_refs(pub, table.base_path, loc, keep)
-    meta = dict(meta)
-    meta["snapshots"] = keep
-    meta["snapshot-log"] = [
-        e
-        for e in meta.get("snapshot-log", [])
-        if e.get("snapshot-id") in keep_ids
-    ]
-    meta["last-updated-ms"] = now_ms
-    meta["metadata-log"] = meta.get("metadata-log", []) + [
-        {
-            "timestamp-ms": now_ms,
-            "metadata-file": os.path.join(
-                meta_dir, f"v{version}.metadata.json"
-            ),
-        }
-    ]
-    new_version = version + 1
-    if not pub.put_json(
-        os.path.join(meta_dir, f"v{new_version}.metadata.json"), meta,
-        if_none_match=True,
-    ):
-        raise FileExistsError(
-            f"iceberg metadata v{new_version} already published by a "
-            "concurrent writer — re-run expire against the new head"
-        )
-    pub.put_text(os.path.join(meta_dir, "version-hint.text"),
-                 str(new_version))
+    kept_refs = _iceberg_refs(
+        pub, table.base_path, meta.get("location", table.base_path), keep
+    )
+    if len(snapshots) > keep_last:
+        keep_ids = {s["snapshot-id"] for s in keep}
+        meta = dict(meta)
+        meta["snapshots"] = keep
+        meta["snapshot-log"] = [
+            e
+            for e in meta.get("snapshot-log", [])
+            if e.get("snapshot-id") in keep_ids
+        ]
+        meta["last-updated-ms"] = now_ms
+        meta["metadata-log"] = meta.get("metadata-log", []) + [
+            {
+                "timestamp-ms": now_ms,
+                "metadata-file": os.path.join(
+                    meta_dir, f"v{version}.metadata.json"
+                ),
+            }
+        ]
+        version = _commit_version(meta_dir, pub, version + 1, meta)
     # physical removal AFTER the commit point: a crash mid-delete
     # leaves only already-unreferenced garbage, re-collected by the
     # NEXT call's sweep (which keys on on-disk owned objects vs
-    # retained refs, not on the now-forgotten expired snapshots).
-    _sweep_iceberg_orphans(
-        table, pub, kept_refs, now_ms, orphan_grace_ms
-    )
-    return new_version
+    # retained refs, not on the now-forgotten expired snapshots)
+    sweep_orphans(table, pub, _iceberg_owned, kept_refs, now_ms, orphan_grace_ms)
+    return version
 
 
 def _iceberg_refs(pub: Publisher, base_path: str, loc: str, snaps) -> set[str]:
@@ -1248,39 +1032,45 @@ def _iceberg_refs(pub: Publisher, base_path: str, loc: str, snaps) -> set[str]:
     return out
 
 
-def _sweep_iceberg_orphans(
-    table: LakehouseTable,
-    pub: Publisher,
-    kept_refs: set[str],
-    now_ms: int,
-    grace_ms: int,
-) -> int:
-    """Delete personality-owned on-disk objects (metadata avro,
-    eqdel-/morrow- parquet) no retained snapshot references. The age
-    guard skips objects younger than `grace_ms`: an unmentioned young
-    object may belong to a concurrent in-flight sync that published
-    its files but has not yet hit its conditional-put commit point."""
-    removed = 0
-    for dirpath, _dirs, names in os.walk(table.base_path):
-        for fn in names:
-            rel = os.path.relpath(
-                os.path.join(dirpath, fn), table.base_path
-            ).replace(os.sep, "/")
-            name = rel.rsplit("/", 1)[-1]
-            owned = (
-                rel.startswith("metadata/") and name.endswith(".avro")
-            ) or (
-                name.startswith(("eqdel-", "morrow-"))
-                and name.endswith(".parquet")
-            )
-            if not owned or rel in kept_refs:
-                continue
-            mt = pub.mtime_ms(os.path.join(table.base_path, rel))
-            if mt is not None and now_ms - mt < grace_ms:
-                continue
-            pub.delete(os.path.join(table.base_path, rel))
-            removed += 1
-    return removed
+def _iceberg_owned(rel: str) -> bool:
+    """Objects this personality owns: metadata avro (manifests and
+    manifest lists) and the eqdel-/morrow- parquet it stages."""
+    name = rel.rsplit("/", 1)[-1]
+    return (rel.startswith("metadata/") and name.endswith(".avro")) or (
+        name.startswith(("eqdel-", "morrow-")) and name.endswith(".parquet")
+    )
+
+
+def _current_entries(table_path: str) -> tuple[dict, list]:
+    """(metadata, [(manifest row, live entry, file path)]) of the
+    current snapshot: the walk every Iceberg client performs —
+    version-hint → metadata.json → manifest list → manifests — over
+    the materialized layout, with stored paths rebased to `table_path`.
+    Live = status EXISTING or ADDED."""
+    meta_dir = os.path.join(table_path, _META_DIR)
+    version = _current_version(meta_dir)
+    if not version:
+        raise FileNotFoundError(f"no iceberg metadata under {table_path}")
+    with open(os.path.join(meta_dir, f"v{version}.metadata.json")) as fh:
+        meta = json.load(fh)
+    current = next(
+        s
+        for s in meta["snapshots"]
+        if s["snapshot-id"] == meta["current-snapshot-id"]
+    )
+    loc = meta.get("location", table_path)
+    with open(_rebase(current["manifest-list"], loc, table_path), "rb") as fh:
+        _, manifests = read_ocf(fh.read())
+    live = []
+    for m in manifests:
+        with open(_rebase(m["manifest_path"], loc, table_path), "rb") as fh:
+            _, entries = read_ocf(fh.read())
+        live += [
+            (m, e, _rebase(e["data_file"]["file_path"], loc, table_path))
+            for e in entries
+            if e["status"] in (0, 1)
+        ]
+    return meta, live
 
 
 def iceberg_pruned_files(
@@ -1291,12 +1081,7 @@ def iceberg_pruned_files(
     manifest-entry `partition` structs alone (typed values), no footer
     reads. Raises when a predicate column is not in the current
     partition spec (an engine would fall back to scanning)."""
-    meta_dir = os.path.join(table_path, _META_DIR)
-    version = _current_version(meta_dir)
-    if not version:
-        raise FileNotFoundError(f"no iceberg metadata under {table_path}")
-    with open(os.path.join(meta_dir, f"v{version}.metadata.json")) as fh:
-        meta = json.load(fh)
+    meta, live = _current_entries(table_path)
     spec = next(
         s for s in meta["partition-specs"]
         if s["spec-id"] == meta["default-spec-id"]
@@ -1307,34 +1092,15 @@ def iceberg_pruned_files(
             raise ValueError(
                 f"{col!r} is not in the partition spec {sorted(declared)}"
             )
-    current = next(
-        s
-        for s in meta["snapshots"]
-        if s["snapshot-id"] == meta["current-snapshot-id"]
+    return sorted(
+        path
+        for _m, e, path in live
+        if e["data_file"].get("content", 0) == 0
+        and all(
+            (e["data_file"].get("partition") or {}).get(c) == v
+            for c, v in (partition_predicate or {}).items()
+        )
     )
-    loc = meta.get("location", table_path)
-    with open(_rebase(current["manifest-list"], loc, table_path), "rb") as fh:
-        _, manifests = read_ocf(fh.read())
-    out: list[str] = []
-    for m in manifests:
-        if m.get("content", 0) != 0:
-            continue  # delete manifests list no scannable data files
-        with open(_rebase(m["manifest_path"], loc, table_path), "rb") as fh:
-            _, entries = read_ocf(fh.read())
-        for e in entries:
-            if e["status"] not in (0, 1):  # EXISTING / ADDED
-                continue
-            if e["data_file"].get("content", 0) != 0:
-                continue
-            pv = e["data_file"].get("partition") or {}
-            if all(
-                pv.get(c) == v
-                for c, v in (partition_predicate or {}).items()
-            ):
-                out.append(
-                    _rebase(e["data_file"]["file_path"], loc, table_path)
-                )
-    return sorted(out)
 
 
 def read_iceberg_snapshot(spark, table_path: str):
@@ -1342,53 +1108,29 @@ def read_iceberg_snapshot(spark, table_path: str):
     snapshot → manifest list → manifest(s) → parquet scan. The same
     walk any Iceberg client performs; used by tests and by engines
     without an Iceberg runtime."""
-    meta_dir = os.path.join(table_path, _META_DIR)
-    version = _current_version(meta_dir)
-    if not version:
-        raise FileNotFoundError(f"no iceberg metadata under {table_path}")
-    with open(os.path.join(meta_dir, f"v{version}.metadata.json")) as fh:
-        meta = json.load(fh)
-    current = next(
-        s
-        for s in meta["snapshots"]
-        if s["snapshot-id"] == meta["current-snapshot-id"]
-    )
-    loc = meta.get("location", table_path)
-    with open(_rebase(current["manifest-list"], loc, table_path), "rb") as fh:
-        _, manifests = read_ocf(fh.read())
+    from pyspark.sql import types as T
+
+    meta, live = _current_entries(table_path)
     # (path, effective data sequence number) per data file; equality
     # delete files carry (path, sequence, equality field ids). A
     # delete applies to data files whose sequence is STRICTLY older
     # (spec §scan-planning).
     data_files: list[tuple[str, int]] = []
     eq_deletes: list[tuple[str, int, list[int]]] = []
-    for m in manifests:
-        with open(_rebase(m["manifest_path"], loc, table_path), "rb") as fh:
-            _, entries = read_ocf(fh.read())
-        for e in entries:
-            if e["status"] not in (0, 1):  # EXISTING / ADDED
-                continue
-            eff = e.get("sequence_number")
-            if eff is None:
-                eff = m["sequence_number"]
-            df_rec = e["data_file"]
-            fpath = _rebase(df_rec["file_path"], loc, table_path)
-            if df_rec.get("content", 0) == 2:
-                eq_deletes.append(
-                    (fpath, eff, list(df_rec.get("equality_ids") or []))
-                )
-            elif df_rec.get("content", 0) == 0:
-                data_files.append((fpath, eff))
-    paths = [p for p, _ in data_files]
+    for m, e, fpath in live:
+        eff = e.get("sequence_number")
+        if eff is None:
+            eff = m["sequence_number"]
+        df_rec = e["data_file"]
+        if df_rec.get("content", 0) == 2:
+            eq_deletes.append(
+                (fpath, eff, list(df_rec.get("equality_ids") or []))
+            )
+        elif df_rec.get("content", 0) == 0:
+            data_files.append((fpath, eff))
     # Reconstruct the table schema from the metadata (inverse of
     # _iceberg_type) and read WITH it, exactly like an Iceberg client
-    # resolving by field name: files written before a schema evolution
-    # lack the newer columns and a bare parquet read would silently
-    # drop them (first-file schema wins); the explicit schema fills
-    # them with null. Also keeps an emptied table reading with its
-    # columns — parity with read_delta_snapshot.
-    from pyspark.sql import types as T
-
+    # resolving by field name.
     schema_json = next(
         s for s in meta["schemas"]
         if s["schema-id"] == meta["current-schema-id"]
@@ -1408,43 +1150,20 @@ def read_iceberg_snapshot(spark, table_path: str):
             return T.DecimalType(int(p), int(sc))
         return inverse[t]
 
-    fields = [
+    schema = T.StructType([
         T.StructField(f["name"], to_spark(f["type"]), True)
         for f in schema_json["fields"]
-    ]
-    schema = T.StructType(fields)
-    if not paths:
-        return spark.createDataFrame([], schema)
-    # Name mapping (schema.name-mapping.default): files without
-    # field-id annotations resolve each field through its mapped
-    # PHYSICAL name — the post-RENAME read path of a real Iceberg
-    # client.
-    names_by_id: dict[int, str] = {}
-    nm_raw = (meta.get("properties") or {}).get("schema.name-mapping.default")
-    if nm_raw:
-        for e in json.loads(nm_raw):
-            if e.get("names"):
-                names_by_id[e["field-id"]] = e["names"][0]
+    ])
+    # Name mapping: files without field-id annotations resolve each
+    # field through its mapped PHYSICAL name — the post-RENAME read
+    # path of a real Iceberg client.
+    names_by_id = _mapped_names(meta)
     phys = {
         f["name"]: names_by_id.get(f["id"], f["name"])
         for f in schema_json["fields"]
     }
-    reader_schema = T.StructType(
-        [T.StructField(phys[f.name], f.dataType, True) for f in schema.fields]
-    )
-
-    def _read(pp):
-        d = spark.read.schema(reader_schema).parquet(*pp)
-        if any(phys[n] != n for n in phys):
-            from pyspark.sql import functions as F
-
-            d = d.select(
-                *[F.col(phys[f.name]).alias(f.name) for f in schema.fields]
-            )
-        return d
-
-    if not eq_deletes:
-        return _read(paths)
+    if not eq_deletes or not data_files:
+        return read_physical(spark, [p for p, _ in data_files], schema, phys)
 
     # Apply equality deletes: group data files by effective sequence
     # (one group per export generation — small), anti-join each group
@@ -1458,7 +1177,7 @@ def read_iceberg_snapshot(spark, table_path: str):
     for p, eff in data_files:
         by_seq.setdefault(eff, []).append(p)
     for eff, group_paths in sorted(by_seq.items()):
-        d = _read(group_paths)
+        d = read_physical(spark, group_paths, schema, phys)
         applicable = [
             (dp, ids) for dp, dseq, ids in eq_deletes if dseq > eff
         ]

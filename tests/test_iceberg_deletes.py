@@ -444,7 +444,7 @@ def test_delta_scans_prune_to_log_bearing_groups(spark, tmp_base):
     rescan the other partition's base files. At 100 TB with a small
     hot log tail this is the difference between a metadata-scale sync
     and two full-table scans."""
-    from onehouse_demos_spark.tables.iceberg_export import _rt_delta
+    from onehouse_demos_spark.tables.personality import rt_delta as _rt_delta
 
     t = _mk(spark, tmp_base)  # partitions sym=GOOG / sym=MSFT
     t.delete(spark.createDataFrame([("k1",), ("k3",)], "key string"))

@@ -13,7 +13,11 @@ for the other two xTable legs:
   and healthy-retry convergence — including Iceberg's lagging-hint
   crash (metadata.json published, hint put died), which the writer
   recovers from by probing forward to the true head;
-- clean_delta_log's deletes flowing through the seam.
+- clean_delta_log's deletes flowing through the seam;
+- the shared personality layer: a lost commit point is one behaviour
+  (FileExistsError, pre-sync view kept) for all three formats, and
+  NULL / escaped partition values decode the same through the Delta,
+  Iceberg and Hudi MOR lanes.
 """
 
 import os
@@ -28,9 +32,13 @@ from onehouse_demos_spark.tables.interop import (
     read_delta_snapshot,
     read_iceberg_snapshot,
     sync_delta_log,
+    read_hudi_rt,
+    read_hudi_snapshot,
+    sync_hudi_metadata,
     sync_iceberg_metadata,
     write_delta_checkpoint,
 )
+from onehouse_demos_spark.tables.iceberg_export import iceberg_pruned_files
 from onehouse_demos_spark.tables.locks import TreeFSObjectStoreEmulator
 
 DDL = "key string, ver int, sym string, px double"
@@ -108,6 +116,32 @@ def _build(spark, base, name):
     return t
 
 
+def _build_mor_with_logs(spark, base, name, sym="GOOG"):
+    """Partitioned MOR table with base rows in the `sym` and MSFT
+    partitions; `_add_logs` then gives the `sym` partition live log
+    content."""
+    t = LakehouseTable.create(
+        spark,
+        os.path.join(base, name),
+        TableConfig(name=name, record_key=["key"], precombine="ver",
+                    partition_by=["sym"], table_type="mor"),
+    )
+    t.insert(spark.createDataFrame(
+        [(f"k{i:02d}", 1, sym if i % 2 else "MSFT", 100.0 + i)
+         for i in range(8)], DDL))
+    return t
+
+
+def _add_logs(spark, t, sym="GOOG"):
+    """A log upsert, a log insert and a log delete in `sym`."""
+    t.upsert(spark.createDataFrame(
+        [("k01", 2, sym, 999.0), ("k91", 1, sym, 91.0)], DDL))
+    t.delete(spark.createDataFrame([("k03",)], "key string"))
+    assert any(
+        f.kind == "log" for f in t.manifest.live_files(include_logs=True)
+    )
+
+
 def _delta_rows(spark, base):
     return {(r.key, r.px)
             for r in read_delta_snapshot(spark, base).collect()}
@@ -155,22 +189,98 @@ def test_sync_over_both_store_providers(spark, tmp_base, fmt, provider):
 @pytest.mark.parametrize("fmt", ["delta", "iceberg"])
 def test_no_publish_bypasses_the_seam(spark, tmp_base, fmt):
     """Filesystem diff == spy-recorded keys — including the Delta
-    checkpoint parquet and `_last_checkpoint`, the exact objects that
-    were raw tmp+rename before r13."""
-    t = _build(spark, tmp_base, f"{fmt}_nobypass")
-    before = _files_under(t.base_path)
-    spy = SpyTreeStore(t.base_path)
-    if fmt == "delta":
-        sync_delta_log(t, store=spy)
-        write_delta_checkpoint(t, store=spy)
-        assert any(k.endswith(".checkpoint.parquet") for k in spy.published)
-        assert any(k.endswith("_last_checkpoint") for k in spy.published)
-    else:
-        sync_iceberg_metadata(t, store=spy)
-    new_files = _files_under(t.base_path) - before
-    assert new_files == set(spy.published), (
-        new_files - set(spy.published),
-        set(spy.published) - new_files,
+    checkpoint parquet and `_last_checkpoint`, and, for a partitioned
+    MOR table with live logs, the staged part files (Delta's
+    `rtcow-*` rewrite, Iceberg's `eqdel-*` / `morrow-*`)."""
+    cow = _build(spark, tmp_base, f"{fmt}_nobypass")
+    mor = _build_mor_with_logs(spark, tmp_base, f"{fmt}_nobypass_mor")
+    _add_logs(spark, mor)
+    staged = ("rtcow-",) if fmt == "delta" else ("eqdel-", "morrow-")
+    for t in (cow, mor):
+        before = _files_under(t.base_path)
+        spy = SpyTreeStore(t.base_path)
+        if fmt == "delta":
+            sync_delta_log(t, store=spy)
+            write_delta_checkpoint(t, store=spy)
+            assert any(k.endswith(".checkpoint.parquet")
+                       for k in spy.published)
+            assert any(k.endswith("_last_checkpoint") for k in spy.published)
+        else:
+            sync_iceberg_metadata(t, store=spy)
+        new_files = _files_under(t.base_path) - before
+        assert new_files == set(spy.published), (
+            new_files - set(spy.published),
+            set(spy.published) - new_files,
+        )
+    parts = [k for k in spy.published
+             if os.path.basename(k).startswith(staged)]
+    assert parts and all("/" in k for k in parts), spy.published
+
+
+class LosingStore(TreeFSObjectStoreEmulator):
+    """A store on which every conditional put (the commit point) loses
+    to a concurrent writer: it reports failure and writes nothing."""
+
+    def put_object(self, key, data, if_none_match=False):
+        if if_none_match:
+            return False
+        return super().put_object(key, data, if_none_match=if_none_match)
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg", "hudi"])
+def test_lost_commit_point_raises_and_keeps_pre_sync_view(
+    spark, tmp_base, fmt
+):
+    """Losing the commit point is one behaviour for every personality:
+    the sync raises FileExistsError and external readers still see
+    exactly the pre-sync rows."""
+    sync, reader = {
+        "delta": (sync_delta_log, _delta_rows),
+        "iceberg": (sync_iceberg_metadata, _ice_rows),
+        "hudi": (sync_hudi_metadata, lambda spark, base: {
+            (r.key, r.px) for r in read_hudi_snapshot(spark, base).collect()
+        }),
+    }[fmt]
+    t = _build(spark, tmp_base, f"{fmt}_lose")
+    sync(t)
+    pre = reader(spark, t.base_path)
+    t.upsert(spark.createDataFrame(ROWS2, DDL))
+    with pytest.raises(FileExistsError):
+        sync(t, store=LosingStore(t.base_path))
+    assert reader(spark, t.base_path) == pre
+
+
+@pytest.mark.parametrize("sym", [None, "a:b", "a b"])
+def test_null_and_escaped_partition_values_through_mor_lanes(
+    spark, tmp_base, sym
+):
+    """NULL and hive-escaped partition values with live log content
+    (upsert, insert, delete) in that partition: the Delta COW rewrite
+    lane, the Iceberg eqdel/morrow lane and the Hudi rt log lane all
+    serve exactly the engine's real-time snapshot."""
+    t = _build_mor_with_logs(spark, tmp_base, "mor_pv", sym)
+    sync_hudi_metadata(t, mor_rt=True)
+    _add_logs(spark, t, sym)
+    sync_delta_log(t)
+    sync_iceberg_metadata(t)
+    sync_hudi_metadata(t, mor_rt=True)
+
+    def rows(df):
+        return {tuple(r) for r in df.select("key", "ver", "sym", "px").collect()}
+
+    want = rows(t.snapshot())
+    assert ("k01", 2, sym, 999.0) in want and ("k91", 1, sym, 91.0) in want
+    assert rows(read_delta_snapshot(spark, t.base_path)) == want
+    assert rows(read_iceberg_snapshot(spark, t.base_path)) == want
+    assert rows(read_hudi_rt(spark, t.base_path)) == want
+    # the published partition metadata decodes the value too: Delta
+    # partitionValues prune to exactly that partition, and the Iceberg
+    # typed partition struct of the appended winner file matches it
+    pruned = read_delta_snapshot(spark, t.base_path, {"sym": sym})
+    assert rows(pruned) == {r for r in want if r[2] == sym}
+    assert any(
+        os.path.basename(p).startswith("morrow-")
+        for p in iceberg_pruned_files(t.base_path, {"sym": sym})
     )
 
 
